@@ -2,19 +2,25 @@
 
 Reference: optbinning/binning/binning_process.py. The reference fans
 out per-variable fits across joblib threads and (in fit_disk) reads
-one column at a time. The Spark-native design replaces both with a
-CONSTANT number of jobs regardless of variable count:
+one column at a time. Here every variable's statistics come from ONE
+stacked grouped aggregation, whatever the variable count and whatever
+the prebinning method (cart, mdlp, quantile or uniform):
 
-  job 1 - multi-column approxQuantile (quantile prebins and/or CART
-          histogram edges for every numeric variable at once)
-  job 2 - (cart/mdlp only) ONE stacked histogram aggregation:
-          Bucketizer over all numeric columns -> explode structs ->
-          groupBy(variable, bucket)  [single shuffle, bounded output]
-  job 3 - ONE stacked bin-stats aggregation over all variables
-          (numeric bins and categorical values unified on a string
-          key) -> groupBy(variable, sample_class, key)
-  driver - per-variable DP solve + table build (ms each)
+  stats  - one struct per (row, variable) exploded and grouped by
+           (variable, sample_class, value-or-bucket, category).
+           Numeric variables group by exact distinct value, or, past
+           _PER_VAR_CAP distinct values, by quantile bucket; uniform
+           and user-split variables past the cap group by their final
+           bins. The collect is LIMIT-guarded.
+  probe  - wide fits (>= 8 variables), and narrow fits whose LIMIT
+           guard tripped, run one aggregation before the stats action:
+           per-variable distinct count, bucket edges (uniform: exact
+           min/max) and the target type.
+  driver - split proposal, the per-prebin re-reduce and the
+           per-variable DP solve + table build on the tiny result.
 
+A narrow fit is one Spark action (three when its LIMIT guard trips);
+a wide fit is two.
 Transform emits every selected variable's CASE expression in a single
 projection — one map-only pass for the whole matrix.
 """
@@ -22,41 +28,46 @@ projection — one map-only pass for the whole matrix.
 from __future__ import annotations
 
 import json
-import os as _os
-import time as _time
 
 import numpy as np
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .binning import ContinuousOptimalBinning, OptimalBinning, _infer_dtype
-
-
-def _dbg(phase: str, t0: float):
-    """SPARK_GRAFT_FIT_DEBUG=1: per-phase wall times of the fused fit
-    to stderr — the tool that localized the sf1 variance (see
-    tools/profile_aging.py)."""
-    if _os.environ.get("SPARK_GRAFT_FIT_DEBUG"):
-        import sys
-
-        print(f"[fit-debug] {phase}: {_time.time() - t0:.2f}s",
-              file=sys.stderr, flush=True)
 from .core.tree import cart_splits, mdlp_splits
 from .multiclass_binning import MulticlassOptimalBinning
-from .operators.aggregation import _agg_exprs, _metric_names, assemble_bin_stats
+from .operators.aggregation import (
+    _agg_exprs,
+    _metric_names,
+    bin_stats_from_values,
+    snap_splits_to_edges,
+    weighted_percentile,
+)
 from .operators.preprocessing import (
     CLEAN,
     MISSING,
     clean_value_expr,
-    numeric_bin_expr,
-    sample_class_expr,
+    normalize_special_codes,
+    sample_class_code_expr,
+    sample_class_code_names,
 )
 
-_EPS = 1e-15
+_PREBINNING_METHODS = ("cart", "mdlp", "quantile", "uniform")
+# Fits with at least this many variables are "wide": they spread and
+# persist the working set and always run the probe.
+_WIDE = 8
+# A numeric variable with at most _PER_VAR_CAP * 1.1 distinct values
+# groups by exact value (sklearn-CART-exact splits); above it, by one
+# of _N_HIST quantile buckets.
+_PER_VAR_CAP = 4096
+_N_HIST = 256
+# Row allowance per categorical variable in the stats collect's LIMIT.
+_CAT_LEVELS_PER_VAR = 100_000
 
 
 class _DictRow:
-    """Row-like dict wrapper for assemble_bin_stats."""
+    """Row-like dict wrapper for rows rebuilt on the driver."""
 
     __slots__ = ("_d",)
 
@@ -67,19 +78,12 @@ class _DictRow:
         return self._d[k]
 
 
-def _infer_target_type(df: DataFrame, y: str) -> str:
-    kind = dict(df.dtypes)[y]
-    if kind in ("double", "float", "decimal"):
-        # continuous unless the distinct values are {0,1}
-        vals = [r[0] for r in df.select(y).distinct().limit(20).collect()]
-        if set(vals) <= {0.0, 1.0, None}:
-            return "binary"
-        return "continuous"
-    vals = [r[0] for r in df.select(y).distinct().limit(200).collect()]
-    vs = {v for v in vals if v is not None}
-    if vs <= {0, 1}:
-        return "binary"
-    return "multiclass"
+def _uniform_splits(mn, mx, n_prebins):
+    """Equal-width prebinning splits of [mn, mx] into n_prebins bins."""
+    if mn is None or mx is None or mn == mx:
+        return np.array([])
+    step = (mx - mn) / n_prebins
+    return np.unique(np.array([mn + i * step for i in range(1, n_prebins)]))
 
 
 class BinningProcess:
@@ -103,7 +107,6 @@ class BinningProcess:
         max_pvalue: float | None = None,
         prebinning_method: str = "cart",
         prebinning_kwargs: dict | None = None,
-        cat_salt_threshold: int | None = None,
         probe_mode: str = "approx",
     ):
         self.variable_names = list(variable_names)
@@ -121,27 +124,13 @@ class BinningProcess:
         self.max_bin_size = max_bin_size
         self.monotonic_trend = monotonic_trend
         self.max_pvalue = max_pvalue
+        if prebinning_method not in _PREBINNING_METHODS:
+            raise ValueError(
+                f"prebinning_method must be one of {_PREBINNING_METHODS}, "
+                f"got {prebinning_method!r}")
         self.prebinning_method = prebinning_method
         self.prebinning_kwargs = dict(prebinning_kwargs or {})
-        # salt gate: when set and the fused fit's probe sees a
-        # categorical whose approx distinct count exceeds it, the
-        # stacked aggregation switches to the salted two-phase plan.
-        # Default OFF (None): the salt is per-partition-CONSTANT, so
-        # it can only spread REDUCE-side load across reducers — and
-        # the fit's aggregations are all algebraic, so map-side
-        # partial aggregation already shrinks every key (hot or not)
-        # to one row per map task before the shuffle. Measured on
-        # organic 6M-row fixtures (round 6, tools + bench salt_ab):
-        # salted loses in EVERY regime — 15.2s vs 9.8s at 200k
-        # distinct uniform, 99.8s vs 88.4s at 2M distinct, 19.7s vs
-        # 9.9s with a 50%-hot key (the case it was built for). The
-        # parameter remains for explicit opt-in (e.g. a custom
-        # non-algebraic aggregation grafted onto the stacked plan,
-        # where partial aggregation cannot absorb the hot key); the
-        # salted algebra itself is exact and value-identical
-        # (test_plan_quality pins both facts).
-        self.cat_salt_threshold = cat_salt_threshold
-        # probe accuracy for the fused fit's split-proposal job.
+        # probe accuracy for the fit's split-proposal job.
         # "approx" (production default): HLL cardinality + sampled
         # percentile_approx bucket edges — one cheap pass at any scale.
         # "exact": exact count_distinct + exact full-data percentile
@@ -163,13 +152,10 @@ class BinningProcess:
     # ------------------------------------------------------------------
     def fit(self, df: DataFrame, y: str, sample_weight: str | None = None,
             target_type: str | None = None):
-        # target-type inference is folded into the fused path's probe
-        # job (one action instead of a separate distinct() scan); the
-        # non-fused fallback infers it with its own scan below
-        fused_eligible = self.prebinning_method in ("cart", "mdlp", "quantile")
+        # an unknown target type (and the multiclass class list) is
+        # inferred inside the stats or probe action — no separate scan
         self._target_type = target_type
-        if self._target_type is None and not fused_eligible:
-            self._target_type = _infer_target_type(df, y)
+        self._classes = None
         df = df.filter(F.col(y).isNotNull())
 
         dtypes = {}
@@ -181,15 +167,6 @@ class BinningProcess:
             )
         self._dtypes = dtypes
 
-        classes = None
-        if self._target_type == "multiclass" and not fused_eligible:
-            classes = [
-                r[0]
-                for r in df.select(y).distinct().orderBy(y).collect()
-                if r[0] is not None
-            ]
-        self._classes = classes
-
         numeric = [v for v in self.variable_names if dtypes[v] == "numerical"]
         categorical = [v for v in self.variable_names if dtypes[v] == "categorical"]
 
@@ -199,20 +176,19 @@ class BinningProcess:
         # single-row-group repartition (spread) is a measured win only
         # for WIDE fits: at 16 vars the probe + stacked aggregation are
         # CPU-bound and a one-row-group scan pins them to one core
-        # (measured 14.7s -> ~7.5s at sf0.1), while at <= 7 vars the shuffle costs
-        # more than the parallelism buys (and the narrow fit keeps the
-        # 2-action/<=4-job plan contract, test_plan_quality.py:130).
-        # On a real cluster the input has many splits and spread() is a
-        # no-op either way.
+        # (measured 14.7s -> ~7.5s at sf0.1), while at <= 7 vars the
+        # shuffle costs ~3x the whole fit (interleaved A/B at sf0.1:
+        # binning_process_summary 1.4s unshuffled vs 4.6s shuffled),
+        # and the narrow fit keeps its 1-action plan contract
+        # (test_plan_quality.py). On a real cluster the input has many
+        # splits and spread() is a no-op either way.
+        wide = len(self.variable_names) >= _WIDE
         work = df.select(
             *dict.fromkeys(
                 [y] + ([sample_weight] if sample_weight else [])
                 + self.variable_names)
         )
-        import os as _os
-
-        if (len(self.variable_names) >= 8
-                and not _os.environ.get("SPARK_GRAFT_NO_SPREAD")):
+        if wide:
             from .sources.tables import spread
 
             work = spread(df.sparkSession, work)
@@ -228,79 +204,37 @@ class BinningProcess:
                 for v in numeric
             ],
         )
-        fused = None
-        if fused_eligible:
-            # raw numeric columns with NO special codes are dead weight
-            # past this point (their sample class is derivable from the
-            # clean column — see _fused_fit_stats), so dropping them
-            # here shrinks the spread shuffle and the persisted cache
-            # by roughly half on the common all-clean wide fit
-            from .operators.preprocessing import normalize_special_codes
-
-            droppable = [
-                v for v in numeric
-                if not normalize_special_codes(self._codes_for(v))
-            ]
-            if droppable:
-                work = work.drop(*droppable)
-            # The fused fit reads the working set exactly TWICE (probe
-            # action + stats action); persisting the cleaned frame at
-            # MEMORY_AND_DISK lets the second action skip the scan +
-            # broadcast join + spread exchange. Deliberately only for
-            # wide fits: that is where the recomputed join/shuffle is
-            # material, and where the fit is the whole job. (At 100 TB
-            # this is the standard two-pass persist trade — one
-            # executor-local write/read vs recomputing a joined scan;
-            # MEMORY_AND_DISK spills instead of OOMing.)
-            # Measured A/B (fresh sessions, best-of-3, 16-var fit at
-            # sf0.1): spread+persist 5.43s, no-persist 7.07s,
-            # no-spread 7.11s, neither 6.21s — each knob is a clear
-            # win WITH the other; the SPARK_GRAFT_NO_PERSIST /
-            # SPARK_GRAFT_NO_SPREAD env gates re-run the experiment.
-            # The trade HOLDS at 10x data (r5 ladder / r6 organic
-            # sf1, 6M joined rows): persist 6.72s vs no-persist
-            # 6.91s — the win
-            # narrows as the scan parallelizes better, exactly the
-            # expected asymptote (persist saves one recompute of the
-            # join+clean projection; both sides scale with cores).
-            persisted = None
-            if (len(self.variable_names) >= 8
-                    and not _os.environ.get("SPARK_GRAFT_NO_PERSIST")):
-                from pyspark import StorageLevel
-
-                level = getattr(
-                    StorageLevel,
-                    _os.environ.get("SPARK_GRAFT_PERSIST_LEVEL",
-                                    "MEMORY_AND_DISK"))
-                work = work.persist(level)
-                persisted = work
-            try:
-                fused = self._fused_fit_stats(
-                    work, numeric, categorical, y, sample_weight, classes
-                )
-            finally:
-                if persisted is not None:
-                    persisted.unpersist()
-            classes = self._classes  # probe may have resolved them
-        if fused is not None:
-            splits_by_var, stats_by_var = fused
-        else:
-            if self._target_type is None:
-                self._target_type = _infer_target_type(df, y)
-            if self._target_type == "multiclass" and classes is None:
-                classes = [
-                    r[0]
-                    for r in df.select(y).distinct().orderBy(y).collect()
-                    if r[0] is not None
-                ]
-                self._classes = classes
-            splits_by_var = self._propose_splits(
-                work, numeric, y, sample_weight, classes
-            )
-            stats_by_var = self._stacked_stats(
-                df, numeric, categorical, splits_by_var, y, sample_weight,
-                classes,
-            )
+        # raw numeric columns with NO special codes are dead weight
+        # past this point (their sample class is derivable from the
+        # clean column — see _stacked_rows), so dropping them here
+        # shrinks the spread shuffle and the persisted cache by roughly
+        # half on the common all-clean wide fit
+        droppable = [
+            v for v in numeric
+            if not normalize_special_codes(self._codes_for(v))
+        ]
+        if droppable:
+            work = work.drop(*droppable)
+        # A wide fit reads the working set exactly TWICE (probe action
+        # + stats action); persisting the cleaned frame at
+        # MEMORY_AND_DISK lets the second action skip the scan +
+        # broadcast join + spread exchange, and spills instead of
+        # OOMing. Measured A/B (fresh sessions, best-of-3, 16-var fit
+        # at sf0.1): spread+persist 5.43s, no-persist 7.07s, no-spread
+        # 7.11s, neither 6.21s — each is a clear win WITH the other.
+        # The trade holds at 10x data (organic sf1, 6M joined rows):
+        # persist 6.72s vs no-persist 6.91s — the win narrows as the
+        # scan parallelizes better (persist saves one recompute of the
+        # join+clean projection; both sides scale with cores).
+        if wide:
+            work = work.persist(StorageLevel.MEMORY_AND_DISK)
+        try:
+            splits_by_var, stats_by_var = self._fused_fit_stats(
+                work, numeric, categorical, y, sample_weight)
+        finally:
+            if wide:
+                work.unpersist()
+        classes = self._classes
 
         # driver: per-variable solve via the single-variable finalizers
         for v in self.variable_names:
@@ -363,243 +297,26 @@ class BinningProcess:
         return MulticlassOptimalBinning(**common)
 
     # ------------------------------------------------------------------
-    def _propose_splits(self, work, numeric, y, w, classes):
-        """Jobs 1-2: split proposal for every numeric variable with a
-        bounded number of passes."""
-        splits_by_var: dict[str, np.ndarray] = {}
-        if not numeric:
-            return splits_by_var
-        method = self.prebinning_method
-        task = "regression" if self._target_type == "continuous" else "classification"
-        cls = [0, 1] if self._target_type == "binary" else classes
+    def _fused_fit_stats(self, work, numeric, categorical, y, w):
+        """The fit's data plane: split proposal AND per-prebin
+        statistics for every variable from ONE combined stacked
+        aggregation grouped by (variable, sample_class,
+        distinct-value-or-bucket, category), reduced on the driver —
+        the multi-variable analog of the single-variable fused fit
+        (binning.py _fused_fit).
 
-        user = {
-            v: np.unique(np.asarray(self._fit_param(v, "user_splits", None), dtype=float))
-            for v in numeric
-            if self._fit_param(v, "user_splits", None) is not None
-        }
-        todo = [v for v in numeric if v not in user]
-        splits_by_var.update(user)
-        if not todo:
-            return splits_by_var
+        Narrow fits try the single-action optimistic route first. Wide
+        fits, and narrow fits it hands back, run a probe aggregation
+        (per-variable cardinality + bucket edges or, for uniform, exact
+        min/max) before the stats action. Low-cardinality variables
+        group by exact distinct value; high-cardinality variables group
+        by quantile bucket with splits snapped to bucket edges, so the
+        driver re-reduce stays exact — or, for uniform, by the final
+        bins themselves.
 
-        if method == "quantile":
-            # 1e-3 rank error vs 1/max_n_prebins (~5%) bin widths is
-            # immaterial, and the GK state per column is ~10x smaller —
-            # at cluster scale the sketch merge traffic shrinks likewise
-            probs = list(np.linspace(0, 1, self.max_n_prebins + 1)[1:-1])
-            allq = work.approxQuantile([f"__clean_{v}" for v in todo], probs, 1e-3)
-            for v, qs in zip(todo, allq):
-                splits_by_var[v] = np.unique(np.asarray(qs, dtype=float))
-            return splits_by_var
-        if method == "uniform":
-            aggs = []
-            for v in todo:
-                aggs += [
-                    F.min(f"__clean_{v}").alias(f"mn_{v}"),
-                    F.max(f"__clean_{v}").alias(f"mx_{v}"),
-                ]
-            row = work.agg(*aggs).first()
-            for v in todo:
-                mn, mx = row[f"mn_{v}"], row[f"mx_{v}"]
-                if mn is None or mx is None or mn == mx:
-                    splits_by_var[v] = np.array([])
-                else:
-                    step = (mx - mn) / self.max_n_prebins
-                    splits_by_var[v] = np.unique(
-                        np.array(
-                            [mn + i * step for i in range(1, self.max_n_prebins)]
-                        )
-                    )
-            return splits_by_var
-
-        # cart / mdlp: exact distinct-value sufficient statistics first
-        # (one stacked groupBy(variable, value) aggregation, bounded
-        # collect) — a 1-feature tree depends only on per-value class
-        # weights, so this reproduces sklearn-CART thresholds exactly
-        # (golden parity); high-cardinality overflow falls back to the
-        # quantile-bucket histogram below.
-        exact_cap = 4096 * max(len(todo), 1)
-        structs_exact = [
-            F.struct(
-                F.lit(v).alias("variable"),
-                F.col(f"__clean_{v}").alias("value"),
-            )
-            for v in todo
-        ]
-        wcol_e = F.col(w) if w else F.lit(1.0)
-        expl = work.select(
-            F.explode(F.array(*structs_exact)).alias("s"),
-            F.col(y).alias("__y"), wcol_e.alias("__w"),
-        ).select("s.variable", "s.value", "__y", "__w").filter(
-            F.col("value").isNotNull()
-        )
-        if task == "classification":
-            aggs_e = [
-                F.sum(F.when(F.col("__y") == c, F.col("__w")).otherwise(0.0))
-                .alias(f"w_{i}")
-                for i, c in enumerate(cls)
-            ]
-        else:
-            aggs_e = [
-                F.sum("__w").alias("cnt"),
-                F.sum(F.col("__w") * F.col("__y")).alias("s1"),
-                F.sum(F.col("__w") * F.col("__y") * F.col("__y")).alias("s2"),
-            ]
-        rows = (
-            expl.groupBy("variable", "value").agg(*aggs_e)
-            .limit(exact_cap + 1).collect()
-        )
-        if len(rows) <= exact_cap:
-            by_var: dict[str, list] = {v: [] for v in todo}
-            for r in rows:
-                by_var[r["variable"]].append(r)
-            for v in todo:
-                rs = sorted(by_var.get(v, []), key=lambda r: r["value"])
-                if len(rs) < 2:
-                    splits_by_var[v] = np.array([])
-                    continue
-                values = np.array([r["value"] for r in rs], dtype=float)
-                if task == "classification":
-                    stats = np.array(
-                        [[r[f"w_{i}"] or 0.0 for i in range(len(cls))]
-                         for r in rs]
-                    )
-                    total_w = stats.sum()
-                else:
-                    stats = np.array(
-                        [[r["cnt"], r["s1"], r["s2"]] for r in rs], dtype=float
-                    )
-                    total_w = stats[:, 0].sum()
-                if method == "mdlp":
-                    splits_by_var[v] = mdlp_splits(
-                        values, stats, **self._prebin_kwargs(v, {}))
-                else:
-                    splits_by_var[v] = cart_splits(
-                        values, stats, task=task,
-                        **self._prebin_kwargs(v, dict(
-                            max_leaf_nodes=self.max_n_prebins,
-                            min_samples_leaf=self.min_prebin_size * total_w,
-                        )))
-            return splits_by_var
-
-        # fallback: one multi-column quantile job for histogram
-        # edges, one stacked histogram aggregation, driver trees.
-        from pyspark.ml.feature import Bucketizer
-
-        n_hist = 256
-        probs = list(np.linspace(0, 1, n_hist + 1)[1:-1])
-        allq = work.approxQuantile([f"__clean_{v}" for v in todo], probs, 1e-3)
-        edges_by_var = {}
-        for v, qs in zip(todo, allq):
-            edges_by_var[v] = sorted(set(qs))
-
-        buckable = [v for v in todo if edges_by_var[v]]
-        out_cols = [f"__bucket_{v}" for v in buckable]
-        buck = Bucketizer(
-            splitsArray=[
-                [-float("inf")] + [float(e) for e in edges_by_var[v]] + [float("inf")]
-                for v in buckable
-            ],
-            inputCols=[f"__clean_{v}" for v in buckable],
-            outputCols=out_cols,
-            handleInvalid="keep",
-        )
-        bucketed = buck.transform(work)
-        structs = [
-            F.struct(
-                F.lit(v).alias("variable"),
-                F.col(f"__bucket_{v}").alias("bucket"),
-                F.col(f"__clean_{v}").alias("value"),
-            )
-            for v in buckable
-        ]
-        wcol = F.col(w) if w else F.lit(1.0)
-        ycol = F.col(y)
-        exploded = bucketed.select(
-            F.explode(F.array(*structs)).alias("s"), ycol.alias("__y"), wcol.alias("__w")
-        ).select("s.variable", "s.bucket", "s.value", "__y", "__w")
-        # invalid bucket (null/NaN value) = len(edges)+1 per variable;
-        # cheap global filter: value is not null
-        exploded = exploded.filter(F.col("value").isNotNull())
-        if task == "classification":
-            aggs = [
-                F.sum(F.when(F.col("__y") == c, F.col("__w")).otherwise(0.0)).alias(
-                    f"w_{i}"
-                )
-                for i, c in enumerate(cls)
-            ]
-        else:
-            aggs = [
-                F.sum("__w").alias("cnt"),
-                F.sum(F.col("__w") * F.col("__y")).alias("s1"),
-                F.sum(F.col("__w") * F.col("__y") * F.col("__y")).alias("s2"),
-            ]
-        rows = (
-            exploded.groupBy("variable", "bucket")
-            .agg(F.max("value").alias("vmax"), *aggs)
-            .collect()
-        )
-        by_var: dict[str, list] = {v: [] for v in buckable}
-        for r in rows:
-            by_var[r["variable"]].append(r)
-        for v in todo:
-            rs = sorted(by_var.get(v, []), key=lambda r: r["bucket"])
-            if len(rs) < 2:
-                splits_by_var[v] = np.array([])
-                continue
-            values = np.array([r["vmax"] for r in rs], dtype=float)
-            if task == "classification":
-                stats = np.array(
-                    [[r[f"w_{i}"] or 0.0 for i in range(len(cls))] for r in rs]
-                )
-                total_w = stats.sum()
-            else:
-                stats = np.array(
-                    [[r["cnt"], r["s1"], r["s2"]] for r in rs], dtype=float
-                )
-                total_w = stats[:, 0].sum()
-            if method == "mdlp":
-                splits_by_var[v] = mdlp_splits(
-                    values, stats, **self._prebin_kwargs(v, {}))
-            else:
-                splits_by_var[v] = cart_splits(
-                    values, stats, task=task,
-                    **self._prebin_kwargs(v, dict(
-                        max_leaf_nodes=self.max_n_prebins,
-                        min_samples_leaf=self.min_prebin_size * total_w,
-                    )))
-        return splits_by_var
-
-    # ------------------------------------------------------------------
-    def _fused_fit_stats(self, work, numeric, categorical, y, w, classes):
-        """TWO-job whole-process fit for cart/mdlp: a probe aggregation
-        (per-variable HLL cardinality + quantile edges, no shuffle)
-        followed by ONE combined stacked aggregation grouped by
-        (variable, sample_class, distinct-value-or-bucket, category).
-        Split proposal AND per-prebin statistics both derive from that
-        single collect on the driver — the multi-variable analog of the
-        single-variable fused fit (binning.py _fused_fit).
-
-        Low-cardinality variables group by exact distinct value
-        (sklearn-CART-exact splits, golden parity); high-cardinality
-        variables group by quantile bucket with splits snapped to
-        bucket edges so the driver re-reduce stays exact. Replaces the
-        4-job path (exact attempt whose LIMIT could not prevent a full
-        shuffle of high-cardinality groups + approxQuantile + bucket
-        histogram + stacked stats).
-
-        Returns (splits_by_var, stats_by_var) or None to fall back.
+        Returns (splits_by_var, stats_by_var).
         """
-        from pyspark.ml.feature import Bucketizer
-
-        from .operators.aggregation import (
-            bin_stats_from_values,
-            snap_splits_to_edges,
-        )
-
-        method = self.prebinning_method
-
+        uniform = self.prebinning_method == "uniform"
         user = {
             v: np.unique(np.asarray(
                 self._fit_param(v, "user_splits", None), dtype=float))
@@ -608,127 +325,90 @@ class BinningProcess:
         }
         todo = [v for v in numeric if v not in user]
 
-        # fold target-type / class-list inference into the probe so
-        # the whole fit stays at two actions (probe + stats agg)
+        # fold target-type / class-list inference into the first action
         need_tt = self._target_type is None
-        need_classes = (
-            self._target_type == "multiclass" and self._classes is None
-        )
+        need_classes = self._target_type == "multiclass"
         y_float = dict(work.dtypes).get(y, "double") in (
             "double", "float") or dict(work.dtypes).get(y, "").startswith(
             "decimal")
 
-        # NOTE on local parallelism: wide fits (>= 8 variables) get a
-        # round-robin spread() at fit() entry, because there the
-        # exploded stacked aggregation is CPU-bound and a one-row-group
-        # scan pins it to one core. Narrow fits deliberately get NO
-        # repartition here: an interleaved A/B at sf0.1 showed the
-        # shuffle costing ~3x the whole fit (binning_process_summary
-        # 1.4s unshuffled vs 4.6s shuffled, scorecard fit 2.1s vs
-        # 3.7s) — the per-row work at <= 7 variables is too cheap to
-        # amortize a full-data exchange.
-        per_var_cap = 4096
-        n_hist = 256
-        # ---- r18 optimistic single-action narrow fit -----------------
-        # Narrow fits (< 8 vars — no spread/persist pairing) skip the
-        # probe ACTION entirely: every todo variable is optimistically
-        # routed to the exact distinct-value path, and the stacked
-        # collect's LIMIT guard detects overflow (falling back to the
-        # probe-routed shape below — 3 actions on genuinely
-        # high-cardinality inputs, 1 on the calibrated common case).
-        # Target-type / class-list inference folds INTO the same
-        # action: float targets aggregate the continuous-metric
-        # superset plus a non-{0,1} flag (binary metrics then derive
-        # exactly on the driver: y in {0,1} makes sum(w*y) identical
-        # to sum(w | y=1)); integral targets add the raw target to the
-        # group key (per-class weighted counts merge exactly on the
-        # driver). Gated off for probe_mode="exact" (the deterministic
-        # -probe contract needs the probe) and the opt-in salt path
-        # (its decision rides the probe's HLLs).
-        if (len(self.variable_names) < 8
-                and self.probe_mode == "approx"
-                and self.cat_salt_threshold is None):
+        # Narrow fits skip the probe ACTION entirely: every todo
+        # variable is optimistically routed to the exact distinct-value
+        # path, and the stacked collect's LIMIT guard detects overflow
+        # (falling back to the probe-routed shape below — 3 actions on
+        # genuinely high-cardinality inputs, 1 on the common case).
+        # Gated off for probe_mode="exact": the deterministic-probe
+        # contract needs the probe.
+        if len(self.variable_names) < _WIDE and self.probe_mode == "approx":
             out = self._optimistic_narrow_fit(
-                work, numeric, categorical, user, todo, y, w, classes,
-                need_tt, need_classes, y_float,
-                per_var_cap=per_var_cap, n_hist=n_hist)
+                work, numeric, categorical, user, y, w,
+                need_tt, need_classes, y_float)
             if out is not None:
                 return out
-        probs = np.linspace(0, 1, n_hist + 1)[1:-1]
+        probe = None
         if todo or need_tt or need_classes:
             probe_aggs = []
-            # ONE shared literal Column for the probability grid and
-            # accuracy: F.lit over a 255-element array costs ~500 py4j
-            # round-trips; rebuilding it inside the per-variable loop
-            # multiplied that into ~7k driver calls (~2 s of socket
-            # latency on a 16-variable fit). Columns are immutable —
-            # one literal serves every percentile_approx.
-            from .operators.fastlit import double_array_lit
-            probs_lit = double_array_lit(probs)
-            # sketch accuracy 1000 (rank error ~0.1%, vs the 0.4%
-            # bucket width the 256-edge grid needs) and a 2% value
-            # sample: the percentile sketches dominate the probe on
-            # wide fits, and an interleaved A/B at organic sf1 (6M
-            # joined rows, r6) read (2000, 20) as the consistently
-            # slowest corner — min-of-3 9.5s vs 6.8-7.6s for any
-            # cheaper setting, with the edges only seeding bucket
-            # boundaries for the high-cardinality snapping path
-            acc_lit = F.lit(int(_os.environ.get(
-                "SPARK_GRAFT_PROBE_ACC", "1000")))
-            sample_mod = F.lit(int(_os.environ.get(
-                "SPARK_GRAFT_PROBE_MOD", "50")))
             exact_probe = self.probe_mode == "exact"
+            if not uniform:
+                probs = np.linspace(0, 1, _N_HIST + 1)[1:-1]
+                # ONE shared literal Column for the probability grid:
+                # F.lit over a 255-element array costs ~500 py4j
+                # round-trips; rebuilding it per variable multiplied
+                # that into ~7k driver calls (~2 s of socket latency on
+                # a 16-variable fit). Columns are immutable — one
+                # literal serves every percentile aggregate.
+                from .operators.fastlit import double_array_lit
+
+                probs_lit = double_array_lit(probs)
+                # sketch accuracy 1000 (rank error ~0.1%, vs the 0.4%
+                # bucket width the 256-edge grid needs) and a 2% value
+                # sample: the percentile sketches dominate the probe on
+                # wide fits, and an interleaved A/B at organic sf1 (6M
+                # joined rows) read (2000, 20) as the consistently
+                # slowest corner — min-of-3 9.5s vs 6.8-7.6s for any
+                # cheaper setting, with the edges only seeding bucket
+                # boundaries for the high-cardinality snapping path
+                acc_lit = F.lit(1000)
+                sample_mod = F.lit(50)
             for v in todo:
                 cv = F.col(f"__clean_{v}")
-                if exact_probe:
-                    # exact mode: deterministic, replayable probe —
-                    # exact distinct count (the small/big gate becomes
-                    # a pure function of the data) and exact full-data
-                    # percentile edges (Spark percentile == linear
-                    # interpolation == DuckDB quantile_cont)
-                    probe_aggs.append(
-                        F.count_distinct(cv).alias(f"nd_{v}"))
+                # exact mode: deterministic, replayable probe — exact
+                # distinct count (the small/big gate becomes a pure
+                # function of the data) and exact full-data percentile
+                # edges (Spark percentile == linear interpolation ==
+                # DuckDB quantile_cont).
+                # NB: the approx distinct count must run over ALL rows —
+                # the edge sample below is a VALUE-hash sample (whole
+                # values in or out), so a sampled count would read ~nd/50
+                # for any mid-cardinality column and misclassify it as
+                # exact-path "small", changing the produced splits.
+                probe_aggs.append(
+                    (F.count_distinct(cv) if exact_probe
+                     else F.approx_count_distinct(cv, rsd=0.05))
+                    .alias(f"nd_{v}"))
+                if uniform:
+                    # equal-width splits need only the exact range; a
+                    # variable past the cap then buckets on its final
+                    # splits like a user-split variable
+                    probe_aggs += [F.min(cv).alias(f"mn_{v}"),
+                                   F.max(cv).alias(f"mx_{v}")]
+                elif exact_probe:
                     probe_aggs.append(
                         F.percentile(cv, probs_lit).alias(f"q_{v}"))
-                    continue
-                # NB: the distinct count must run over ALL rows — the
-                # sample gate below is a VALUE-hash sample (whole values in
-                # or out), so a sampled count would read ~nd/20 for any
-                # mid-cardinality column and misclassify it as exact-
-                # path "small", changing the produced splits.
-                probe_aggs.append(
-                    F.approx_count_distinct(
-                        f"__clean_{v}", rsd=0.05).alias(f"nd_{v}")
-                )
-                # quantile-grid edges from an INLINE ~2% sample (same
-                # single action): the edges only seed bucket
-                # boundaries for the high-cardinality snapping path —
-                # full-scan sketch insertion per variable is the probe
-                # bottleneck at any scale; at 100 TB you'd sample for
-                # edge-finding anyway. The sample gate is a VALUE hash
-                # (rand() is rejected inside aggregates): for the
-                # high-cardinality columns that actually use these
-                # edges, values are near-unique so this is row
-                # sampling, and it is fully deterministic.
-                cv = F.col(f"__clean_{v}")
-                probe_aggs.append(
-                    F.percentile_approx(
-                        F.when(F.pmod(F.hash(cv), sample_mod) == 0, cv),
-                        probs_lit, acc_lit,
-                    ).alias(f"q_{v}")
-                )
-            # opt-in salt probe (X7): categorical cardinality rides
-            # the SAME probe action (HLL state, no extra scan) and
-            # decides below whether the stacked aggregation takes the
-            # salted two-phase plan. Only collected when a threshold
-            # is SET (default None skips the HLLs entirely) and the
-            # probe runs anyway — a fit with no numeric proposals and
-            # a known target keeps its 1-action plan.
-            if self.cat_salt_threshold is not None:
-                for v in categorical:
+                else:
+                    # quantile-grid edges from an INLINE ~2% sample
+                    # (same single action): full-scan sketch insertion
+                    # per variable is the probe bottleneck at any scale.
+                    # The sample gate is a VALUE hash (rand() is
+                    # rejected inside aggregates): for the
+                    # high-cardinality columns that actually use these
+                    # edges, values are near-unique so this is row
+                    # sampling, and it is fully deterministic.
                     probe_aggs.append(
-                        F.approx_count_distinct(
-                            F.col(v), rsd=0.05).alias(f"ndc_{v}")
+                        F.percentile_approx(
+                            F.when(F.pmod(F.hash(cv), sample_mod) == 0, cv),
+                            probs_lit, acc_lit,
+                        ).alias(f"q_{v}")
                     )
             if need_tt and y_float:
                 # float target: binary iff values ⊆ {0, 1}; a single
@@ -741,64 +421,35 @@ class BinningProcess:
                 # classes by contract, like the reference)
                 probe_aggs.append(F.sort_array(
                     F.collect_set(F.col(y))).alias("__y_classes"))
-            _t_probe = _time.time()
             probe = work.agg(*probe_aggs).first()
-            _dbg("probe_agg", _t_probe)
-            if need_tt:
-                if y_float:
-                    self._target_type = (
-                        "continuous" if probe["__y_non01"] else "binary")
+            if need_tt and y_float:
+                self._target_type = (
+                    "continuous" if probe["__y_non01"] else "binary")
+            elif need_tt or need_classes:
+                ycls = [v for v in probe["__y_classes"] if v is not None]
+                if need_classes or not set(ycls) <= {0, 1}:
+                    self._target_type = "multiclass"
+                    self._classes = ycls
                 else:
-                    ycls = [v for v in probe["__y_classes"] if v is not None]
-                    if set(ycls) <= {0, 1}:
-                        self._target_type = "binary"
-                    else:
-                        self._target_type = "multiclass"
-                        self._classes = classes = ycls
-            elif need_classes:
-                self._classes = classes = [
-                    v for v in probe["__y_classes"] if v is not None]
-        else:
-            probe = None
+                    self._target_type = "binary"
 
-        # opt-in salt decision from the probe's HLL counts (rides the
-        # probe action for free): past an EXPLICIT threshold,
-        # pre-split every key across up to defaultParallelism reducers
-        # and re-reduce with the exact merge algebra (identical
-        # results; proven value-equal by test_plan_quality's
-        # salted-vs-unsalted check). Off by default — see the
-        # cat_salt_threshold comment in __init__ for the round-6
-        # measurements showing the salt loses in every regime for
-        # these algebraic aggregations.
-        salt_s = None
-        if (probe is not None and categorical
-                and self.cat_salt_threshold is not None):
-            try:
-                if any(probe[f"ndc_{v}"] > self.cat_salt_threshold
-                       for v in categorical):
-                    salt_s = min(
-                        work.sparkSession.sparkContext.defaultParallelism,
-                        16)
-            except (KeyError, ValueError):
-                salt_s = None
-        # observability: tests assert the auto decision engaged
-        self._stats_salt_partitions = salt_s
-
-        task = (
-            "regression" if self._target_type == "continuous"
-            else "classification"
-        )
-        tt = self._target_type
-        metrics = _metric_names(tt, classes)
-        small, big, edges_by_var, raw_edges_by_var = [], [], {}, {}
+        fixed = dict(user)
+        big, edges_by_var, raw_edges_by_var = [], {}, {}
         for v in todo:
-            raw = [float(e) for e in (probe[f"q_{v}"] or [])]
-            edges = sorted(set(raw))
-            if probe[f"nd_{v}"] <= per_var_cap * 1.1 or not edges:
-                small.append(v)
+            if uniform:
+                splits = _uniform_splits(
+                    probe[f"mn_{v}"], probe[f"mx_{v}"], self.max_n_prebins)
+                edges = [float(e) for e in splits]
             else:
-                big.append(v)
-                edges_by_var[v] = edges
+                raw = [float(e) for e in (probe[f"q_{v}"] or [])]
+                edges = sorted(set(raw))
+            if probe[f"nd_{v}"] <= _PER_VAR_CAP * 1.1 or not edges:
+                continue
+            big.append(v)
+            edges_by_var[v] = edges
+            if uniform:
+                fixed[v] = splits
+            else:
                 raw_edges_by_var[v] = raw
         # user-split variables ride the bucket path with the final
         # splits AS the bucket edges: per-bucket stats ARE the per-bin
@@ -807,28 +458,30 @@ class BinningProcess:
             if us.size:
                 big.append(v)
                 edges_by_var[v] = [float(e) for e in us]
-            else:
-                small.append(v)
 
+        tt, classes = self._target_type, self._classes
+        # the categorical allowance in the LIMIT is the only bound that
+        # real data can exceed (> _CAT_LEVELS_PER_VAR levels): this
+        # route then re-collects the same aggregation without the LIMIT
         rows = self._stacked_rows(
             work, numeric, categorical, big, edges_by_var, y, w,
-            tt, classes, metrics, salt_s,
-            per_var_cap=per_var_cap, n_hist=n_hist)
-        if rows is None:
-            return None
+            tt, classes, bounded=False)
         return self._reduce_stacked(
-            rows, numeric, categorical, user, edges_by_var,
-            raw_edges_by_var, metrics, tt, task, method, n_hist)
+            rows, numeric, categorical, fixed, edges_by_var,
+            raw_edges_by_var, tt, classes)
 
     # ------------------------------------------------------------------
     def _optimistic_narrow_fit(self, work, numeric, categorical, user,
-                               todo, y, w, classes, need_tt,
-                               need_classes, y_float, *, per_var_cap,
-                               n_hist):
+                               y, w, need_tt, need_classes, y_float):
         """Single-action narrow fit (see the call site comment).
+        Target-type / class-list inference folds INTO the same action:
+        float targets aggregate the continuous-metric superset plus a
+        non-{0,1} flag (binary metrics then derive exactly on the
+        driver: y in {0,1} makes sum(w*y) identical to sum(w | y=1));
+        integral targets add the raw target to the group key (per-class
+        weighted counts merge exactly on the driver).
         Returns (splits_by_var, stats_by_var) or None when the LIMIT
         guard trips — the caller then runs the probe-routed shape."""
-        self._stats_salt_partitions = None
         big, edges_by_var = [], {}
         # user-split variables ride the bucket path with the final
         # splits AS the bucket edges — they never need the probe
@@ -836,7 +489,7 @@ class BinningProcess:
             if us.size:
                 big.append(v)
                 edges_by_var[v] = [float(e) for e in us]
-        tt = self._target_type
+        tt, classes = self._target_type, None
         mode = "std"
         if need_tt:
             mode = "float_infer" if y_float else "ygroup"
@@ -847,7 +500,7 @@ class BinningProcess:
 
         def _too_wide(rows):
             # per-variable routing gate, mirroring the probe's
-            # nd <= 1.1 * per_var_cap rule (true cardinality here
+            # nd <= 1.1 * _PER_VAR_CAP rule (true cardinality here
             # instead of the rsd=0.05 HLL estimate — they differ only
             # when HLL misses by >10%): any non-bucketized numeric
             # variable past the cap re-routes the WHOLE fit through
@@ -861,27 +514,22 @@ class BinningProcess:
                         and r["sample_class"] == 0
                         and r["gv"] is not None):
                     seen.setdefault(vid, set()).add(r["gv"])
-            lim = per_var_cap * 1.1
+            lim = _PER_VAR_CAP * 1.1
             return any(len(s) > lim for s in seen.values())
 
         if mode == "std":
-            metrics = _metric_names(tt, classes)
             rows = self._stacked_rows(
                 work, numeric, categorical, big, edges_by_var, y, w,
-                tt, classes, metrics, None,
-                per_var_cap=per_var_cap, n_hist=n_hist)
+                tt, classes)
             if rows is None or _too_wide(rows):
                 return None
         elif mode == "float_infer":
-            cont = _metric_names("continuous")
             agg_cols = _agg_exprs("__y", "__w", "continuous") + [
                 F.max(F.when(~F.col("__y").isin(0.0, 1.0), 1)
                       .otherwise(0)).alias("__non01")]
             rows = self._stacked_rows(
                 work, numeric, categorical, big, edges_by_var, y, w,
-                "continuous", None, cont, None,
-                per_var_cap=per_var_cap, n_hist=n_hist,
-                agg_cols=agg_cols)
+                "continuous", None, agg_cols=agg_cols)
             if rows is None or _too_wide(rows):
                 return None
             if any(r["__non01"] for r in rows):
@@ -902,9 +550,7 @@ class BinningProcess:
                 F.coalesce(F.sum(F.col("__w")), F.lit(0.0)).alias("__cw")]
             rows = self._stacked_rows(
                 work, numeric, categorical, big, edges_by_var, y, w,
-                None, None, ["__cw"], None,
-                per_var_cap=per_var_cap, n_hist=n_hist,
-                agg_cols=agg_cols, group_y=True, cap_mult=8)
+                None, None, agg_cols=agg_cols, group_y=True, cap_mult=8)
             if rows is None or _too_wide(rows):
                 return None
             ycls = [v for v in sorted({r["__y"] for r in rows})
@@ -915,11 +561,9 @@ class BinningProcess:
                 self._classes = classes
             else:
                 tt = "binary"
-                classes = None
             self._target_type = tt
             # exact driver-side merge of the per-(group, target-class)
-            # weighted counts into the standard metric rows — the same
-            # two-stage sum algebra the salted re-reduce uses
+            # weighted counts into the standard metric rows
             merged: dict = {}
             for r in rows:
                 k = (r["variable"], r["sample_class"], r["gv"], r["key"])
@@ -941,23 +585,20 @@ class BinningProcess:
                         d[f"n_event_{i}"] = slot["cw"].get(c, 0.0)
                 out_rows.append(_DictRow(d))
             rows = out_rows
-        metrics = _metric_names(tt, classes)
-        task = "regression" if tt == "continuous" else "classification"
         return self._reduce_stacked(
-            rows, numeric, categorical, user, edges_by_var, {},
-            metrics, tt, task, self.prebinning_method, n_hist)
+            rows, numeric, categorical, user, edges_by_var, {}, tt, classes)
 
     # ------------------------------------------------------------------
     def _stacked_rows(self, work, numeric, categorical, big,
-                      edges_by_var, y, w, tt, classes, metrics, salt_s,
-                      *, per_var_cap=4096, n_hist=256, agg_cols=None,
-                      group_y=False, cap_mult=1):
+                      edges_by_var, y, w, tt, classes, *, agg_cols=None,
+                      group_y=False, cap_mult=1, bounded=True):
         """Build and collect the combined stacked aggregation (the fit's
-        stats action). Returns the collected rows, or None when the
-        LIMIT guard trips (caller falls back). ``agg_cols`` overrides
-        the per-group aggregate expressions and ``group_y`` adds the
-        raw target to the group key — the optimistic narrow path uses
-        both to fold target-type inference into this single action."""
+        stats action) under a LIMIT guard. On overflow it returns None,
+        or, with ``bounded=False``, re-collects the same aggregation
+        once without the LIMIT. ``agg_cols`` overrides the per-group
+        aggregate expressions and ``group_y`` adds the raw target to
+        the group key — the optimistic narrow path uses both to fold
+        target-type inference into this single action."""
         from pyspark.ml.feature import Bucketizer
 
         if big:
@@ -976,14 +617,8 @@ class BinningProcess:
         # the exploded structs (per-row string allocation across
         # n_vars x n_rows exploded records measurably dominates the
         # aggregation hash cost); they decode back to names once on
-        # the tiny collected result below
-        from .operators.preprocessing import (
-            normalize_special_codes,
-            sample_class_code_expr,
-        )
-
-        var_list = list(numeric) + list(categorical)
-        var_id = {v: i for i, v in enumerate(var_list)}
+        # the tiny collected result in _reduce_stacked
+        var_id = {v: i for i, v in enumerate(list(numeric) + list(categorical))}
         structs = []
         for v in numeric:
             cv = F.col(f"__clean_{v}")
@@ -995,8 +630,7 @@ class BinningProcess:
                 # no special codes: clean NULL <=> raw missing, so the
                 # sample class derives from the clean column alone and
                 # fit() can drop the raw column from the shuffled /
-                # cached working set (roughly halves its width on the
-                # common all-clean wide fit)
+                # cached working set
                 scode = F.when(cv.isNull(), F.lit(1)).otherwise(F.lit(0))
             gv = (
                 F.when(cv.isNotNull(), F.col(f"__bkt_{v}").cast("double"))
@@ -1027,57 +661,38 @@ class BinningProcess:
         ).select("s.variable", "s.sample_class", "s.gv", "s.key",
                  "s.cval", "__y", "__w")
         # bounded collect: exact values are LIMIT-backstopped; buckets
-        # and special/missing groups are bounded by construction; the
-        # allowance covers categorical cardinality (unbounded today in
-        # the fallback too — cat_cutoff is the scale guard there)
+        # and special/missing groups are bounded by construction; past
+        # the categorical allowance the optimistic route hands over to
+        # the probe route, which re-collects without the LIMIT
         small_n = len(numeric) - len(big)
         cap = (
-            per_var_cap * 2 * max(small_n, 1)
-            + (n_hist + 2) * max(len(big), 1)
-            + 100_000 * max(len(categorical), 1)
+            _PER_VAR_CAP * 2 * max(small_n, 1)
+            + (_N_HIST + 2) * max(len(big), 1)
+            + _CAT_LEVELS_PER_VAR * max(len(categorical), 1)
             + 4 * len(self.variable_names)
         ) * cap_mult
         keys = ["variable", "sample_class", "gv", "key"] + (
             ["__y"] if group_y else [])
-        if salt_s and salt_s > 1:
-            from .operators.aggregation import _merge_exprs
-
-            grouped = (
-                exploded.groupBy(
-                    *keys,
-                    F.pmod(F.spark_partition_id(), F.lit(salt_s))
-                    .alias("__salt"))
-                .agg(F.max("cval").alias("vmax"),
-                     *_agg_exprs("__y", "__w", tt, classes))
-                .groupBy(*keys)
-                .agg(F.max("vmax").alias("vmax"), *_merge_exprs(metrics))
-            )
-        else:
-            grouped = exploded.groupBy(*keys).agg(
-                F.max("cval").alias("vmax"),
-                *(agg_cols if agg_cols is not None
-                  else _agg_exprs("__y", "__w", tt, classes)))
-        _t_stats = _time.time()
+        grouped = exploded.groupBy(*keys).agg(
+            F.max("cval").alias("vmax"),
+            *(agg_cols if agg_cols is not None
+              else _agg_exprs("__y", "__w", tt, classes)))
         rows = grouped.limit(cap + 1).collect()
-        _dbg("stats_agg", _t_stats)
-        if len(rows) > cap:
-            return None
-        return rows
+        if len(rows) <= cap:
+            return rows
+        return None if bounded else grouped.collect()
 
     # ------------------------------------------------------------------
-    def _reduce_stacked(self, rows, numeric, categorical, user,
-                        edges_by_var, raw_edges_by_var, metrics, tt,
-                        task, method, n_hist):
+    def _reduce_stacked(self, rows, numeric, categorical, fixed,
+                        edges_by_var, raw_edges_by_var, tt, classes):
         """Driver-side reduction of the collected stacked rows into
         (splits_by_var, stats_by_var) — split proposal AND per-prebin
-        statistics from the one collect."""
-        from .core.tree import cart_splits, mdlp_splits
-        from .operators.aggregation import (
-            bin_stats_from_values,
-            snap_splits_to_edges,
-        )
-        from .operators.preprocessing import sample_class_code_names
-
+        statistics from the one collect. ``fixed`` maps a variable to
+        splits decided before the collect (user splits, or uniform
+        splits of a bucketized variable)."""
+        method = self.prebinning_method
+        metrics = _metric_names(tt, classes)
+        task = "regression" if tt == "continuous" else "classification"
         # decode int keys back to the name/string view the per-variable
         # reducers consume (one pass over the tiny collected result)
         var_list = list(numeric) + list(categorical)
@@ -1134,24 +749,19 @@ class BinningProcess:
             else:
                 values = np.array([r["gv"] for r in clean_rows], dtype=float)
                 lower_edges = None
+            clean_vals = [_vals(r) for r in clean_rows]
             per_value = {
-                m: np.array(
-                    [
-                        (
-                            r[m]
-                            if r[m] is not None
-                            else (np.nan if m in ("min_y", "max_y") else 0.0)
-                        )
-                        for r in clean_rows
-                    ],
-                    dtype=float,
-                )
+                m: np.array([d[m] for d in clean_vals], dtype=float)
                 for m in metrics
             }
-            if v in user:
-                splits = user[v]
+            if v in fixed:
+                splits = fixed[v]
             elif len(values) < 2:
                 splits = np.array([])
+            elif method == "uniform":
+                # values are the exact sorted distinct clean values
+                splits = _uniform_splits(
+                    values[0], values[-1], self.max_n_prebins)
             elif method == "quantile":
                 tgt = np.linspace(0, 1, self.max_n_prebins + 1)[1:-1]
                 if v in raw_edges_by_var:
@@ -1159,11 +769,9 @@ class BinningProcess:
                     # re-reduce below stays exact without snapping
                     raw = raw_edges_by_var[v]
                     idx = np.clip(
-                        np.round(tgt * n_hist).astype(int), 1, len(raw))
+                        np.round(tgt * _N_HIST).astype(int), 1, len(raw))
                     splits = np.unique([raw[i - 1] for i in idx])
                 else:
-                    from .operators.aggregation import weighted_percentile
-
                     cnts = (
                         sum(per_value[m] for m in metrics)
                         if task == "classification"
@@ -1211,82 +819,6 @@ class BinningProcess:
                     specials[r["sample_class"].split(":", 1)[1]] = _vals(r)
             stats_by_var[v] = (cats, missing, specials)
         return splits_by_var, stats_by_var
-
-    # ------------------------------------------------------------------
-    def _stacked_stats(self, df, numeric, categorical, splits_by_var, y, w, classes):
-        """Job 3: ONE aggregation for every variable's bin/category
-        statistics, numeric bins and categorical values unified on a
-        string key."""
-        structs = []
-        for v in numeric:
-            c = F.col(v).cast("double")
-            sclass = sample_class_expr(c, "numerical", self._codes_for(v))
-            bin_e = numeric_bin_expr(c, list(splits_by_var.get(v, [])))
-            structs.append(
-                F.struct(
-                    F.lit(v).alias("variable"),
-                    sclass.alias("sample_class"),
-                    F.when(sclass == CLEAN, bin_e.cast("string")).alias("key"),
-                )
-            )
-        for v in categorical:
-            c = F.col(v)
-            sclass = sample_class_expr(c, "categorical", self._codes_for(v))
-            structs.append(
-                F.struct(
-                    F.lit(v).alias("variable"),
-                    sclass.alias("sample_class"),
-                    F.when(sclass == CLEAN, c.cast("string")).alias("key"),
-                )
-            )
-        wcol = F.col(w) if w else F.lit(1.0)
-        exploded = df.select(
-            F.explode(F.array(*structs)).alias("s"),
-            F.col(y).alias("__y"),
-            wcol.alias("__w"),
-        ).select("s.variable", "s.sample_class", "s.key", "__y", "__w")
-        tt = self._target_type
-        rows = (
-            exploded.groupBy("variable", "sample_class", "key")
-            .agg(*_agg_exprs("__y", "__w", tt, classes))
-            .collect()
-        )
-        by_var: dict[str, list] = {v: [] for v in self.variable_names}
-        for r in rows:
-            by_var[r["variable"]].append(r)
-
-        out = {}
-        metrics = _metric_names(tt, classes)
-        for v in numeric:
-            n_bins = len(splits_by_var.get(v, [])) + 1
-            conv = []
-            for r in by_var[v]:
-                d = r.asDict()
-                d["bin"] = int(r["key"]) if r["key"] is not None else None
-                conv.append(d)
-            out[v] = assemble_bin_stats(
-                [_DictRow(d) for d in conv], n_bins, tt, classes
-            )
-        for v in categorical:
-            cats, missing, specials = {}, {m: 0.0 for m in metrics}, {}
-            for r in by_var[v]:
-                vals = {
-                    m: (
-                        r[m]
-                        if r[m] is not None
-                        else (np.nan if m in ("min_y", "max_y") else 0.0)
-                    )
-                    for m in metrics
-                }
-                if r["sample_class"] == CLEAN:
-                    if r["key"] is not None:
-                        cats[r["key"]] = vals
-                elif r["sample_class"] == MISSING:
-                    missing = vals
-                else:
-                    specials[r["sample_class"].split(":", 1)[1]] = vals
-            out[v] = (cats, missing, specials)
-        return out
 
     # ------------------------------------------------------------------
     def _variable_metrics(self, v):

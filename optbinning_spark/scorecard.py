@@ -566,17 +566,21 @@ class Scorecard:
         return total
 
     def _points_case(self, binner, col, pts, dtype):
-        from .operators.preprocessing import normalize_special_codes
+        from .operators.preprocessing import (
+            _typed_specials,
+            missing_predicate,
+            normalize_special_codes,
+        )
 
         groups = normalize_special_codes(binner.special_codes)
-        if dtype == "categorical":
-            is_missing = col.isNull()
-        else:
-            is_missing = col.isNull() | F.isnan(col)
-        # missing/special contribute 0 points (metric default 0 * coef)
-        expr = F.when(is_missing, F.lit(0.0))
-        for g, values in groups.items():
-            expr = expr.when(col.isin(values), F.lit(0.0))
+        # missing/special contribute 0 points (metric default 0 * coef);
+        # only codes of the column's type can match (a numeric code
+        # against a string column is a CAST_INVALID_INPUT under ANSI)
+        expr = F.when(missing_predicate(col, dtype), F.lit(0.0))
+        for values in groups.values():
+            values = _typed_specials(values, dtype)
+            if values:
+                expr = expr.when(col.isin(values), F.lit(0.0))
         if dtype == "categorical":
             for bin_idx, cats in enumerate(binner._bin_categories or []):
                 expr = expr.when(col.isin(list(cats)), F.lit(pts[bin_idx]))

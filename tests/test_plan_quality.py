@@ -177,9 +177,8 @@ def test_process_fit_overflow_falls_back_to_probe(spark, lineitem):
         bp = BinningProcess(
             ["l_quantity", "l_extendedprice"], prebinning_method="cart")
         if force_probe:
-            # widen past the narrow gate? no — flip the salt knob off
-            # the optimistic gate instead (needs the probe by design)
-            bp.cat_salt_threshold = 10**12
+            # skip the optimistic route: the fit starts at the probe
+            bp._optimistic_narrow_fit = lambda *a, **k: None
         bp.fit(lineitem, "y")
         return bp
 
@@ -285,57 +284,6 @@ def test_salted_categorical_agg_two_stage_and_correct(spark):
     assert plan.count("Exchange hashpartitioning") >= 2, plan
     # phase-1 grouping carries the partition-id salt key
     assert "SPARK_PARTITION_ID" in plan.upper(), plan
-
-
-def test_auto_salt_engages_on_high_cardinality_categorical(spark):
-    """X7 auto-salt: the wide-fit probe's HLL cardinality flips the
-    stacked aggregation to the salted two-phase plan past
-    cat_salt_threshold with NO per-variable config — and the fit's
-    results are identical either way (the salted algebra is exact).
-    A skewed, high-cardinality fixture (hot key + ~600 distinct cats)
-    fits once below and once above the threshold."""
-    from optbinning_spark import BinningProcess
-
-    rows = []
-    for i in range(6000):
-        # ~600 distinct categories, one of them holding ~50% of rows
-        cat = "hot" if i % 2 else f"c{i % 600}"
-        rows.append((cat, float(i % 30), 1 if i % 3 == 0 else 0))
-    df = spark.createDataFrame(
-        rows, "cat string, num double, y int").repartition(8)
-
-    def fit(threshold):
-        bp = BinningProcess(
-            ["cat", "num"], categorical_variables=["cat"],
-            prebinning_method="quantile",
-            cat_salt_threshold=threshold)
-        bp.fit(df, "y")
-        return bp
-
-    salted = fit(50)       # 600 > 50 -> salted plan engages
-    unsalted = fit(10**9)  # never triggers
-    assert salted._stats_salt_partitions and salted._stats_salt_partitions > 1
-    assert unsalted._stats_salt_partitions is None
-    # round 6: the DEFAULT is off (cat_salt_threshold=None) — the salt
-    # only spreads reduce-side load, which partial aggregation already
-    # absorbs for the algebraic fit aggs (measured slower in every
-    # regime; see bench.py _salt_ab / binning_process.__init__)
-    from optbinning_spark import BinningProcess as _BP
-
-    dflt = _BP(["cat", "num"], categorical_variables=["cat"],
-               prebinning_method="quantile")
-    assert dflt.cat_salt_threshold is None
-    dflt.fit(df, "y")
-    assert dflt._stats_salt_partitions is None
-    # value-identical across the two physical plans
-    ts = salted.get_binned_variable("cat").binning_table.build()
-    tu = unsalted.get_binned_variable("cat").binning_table.build()
-    import pandas as pd
-
-    pd.testing.assert_frame_equal(ts, tu)
-    ns = salted.get_binned_variable("num").binning_table.build()
-    nu = unsalted.get_binned_variable("num").binning_table.build()
-    pd.testing.assert_frame_equal(ns, nu)
 
 
 def test_sampling_ops_are_map_only(spark):

@@ -27,6 +27,14 @@ def test_probe_mode_validated():
         BinningProcess(["l_quantity"], probe_mode="sampled")
 
 
+def test_prebinning_method_validated():
+    for method in ("quantile_exact", "tree", ""):
+        with pytest.raises(ValueError, match="prebinning_method"):
+            BinningProcess(["l_quantity"], prebinning_method=method)
+    for method in ("cart", "mdlp", "quantile", "uniform"):
+        BinningProcess(["l_quantity"], prebinning_method=method)
+
+
 def test_exact_probe_matches_approx_on_low_cardinality(spark):
     """Low-cardinality variables take the exact-distinct-value path in
     BOTH modes (the probe only gates and seeds the bucket path), so

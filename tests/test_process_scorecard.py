@@ -460,11 +460,84 @@ def test_monitoring_continuous_target_analysis(spark):
     assert ta["mean"].between(4, 6).all()
 
 
+def _recount(x, y, w, splits, special=None):
+    """Weighted (non-event, event) counts per left-closed bin of
+    ``splits`` over the clean rows, plus the special and missing rows
+    — an independent numpy recount of a binary binning table."""
+    x = np.array([np.nan if v is None else v for v in x], dtype=float)
+    y, w = np.asarray(y), np.asarray(w, dtype=float)
+    miss = np.isnan(x)
+    spec = ~miss & (x == special)
+    clean = ~miss & ~spec
+    splits = np.asarray(splits, dtype=float)
+    b = (x[clean][:, None] >= splits[None, :]).sum(axis=1)
+    out = {"clean": tuple(
+        np.bincount(b, weights=w[clean] * (y[clean] == k),
+                    minlength=len(splits) + 1) for k in (0, 1))}
+    for name, m in (("special", spec), ("missing", miss)):
+        out[name] = (float((w * m * (y == 0)).sum()),
+                     float((w * m * (y == 1)).sum()))
+    return out
+
+
+def _table_matches_recount(binner, rc):
+    """The fitted table's rows (clean bins, Special when present,
+    Missing) equal the recount exactly (integral weights)."""
+    t = binner.binning_table.build(add_totals=False)
+    ne, ev = [list(a) for a in rc["clean"]]
+    if sum(rc["special"]):
+        ne.append(rc["special"][0])
+        ev.append(rc["special"][1])
+    ne.append(rc["missing"][0])
+    ev.append(rc["missing"][1])
+    np.testing.assert_array_equal(np.array(t["n_nonevent"], dtype=float), ne)
+    np.testing.assert_array_equal(np.array(t["n_event"], dtype=float), ev)
+
+
+def _spy_fit(bp):
+    """Record the route, the stacked aggregation's bucketized
+    variables and the prebin (splits, stats) of the next fit."""
+    seen = {"routes": [], "big": []}
+    opt, rows, stats = (bp._optimistic_narrow_fit, bp._stacked_rows,
+                        bp._fused_fit_stats)
+
+    def opt_spy(*a, **k):
+        out = opt(*a, **k)
+        seen["routes"].append("optimistic" if out is not None else "probe")
+        return out
+
+    def rows_spy(*a, **k):
+        seen["big"].append(list(a[3]))
+        return rows(*a, **k)
+
+    def stats_spy(*a, **k):
+        seen["prebins"] = stats(*a, **k)
+        return seen["prebins"]
+
+    bp._optimistic_narrow_fit = opt_spy
+    bp._stacked_rows = rows_spy
+    bp._fused_fit_stats = stats_spy
+    return seen
+
+
+def _categories_match_recount(cats, rows, ci, yi, wi):
+    exp: dict = {}
+    for r in rows:
+        if r[ci] is not None:
+            d = exp.setdefault(r[ci], [0.0, 0.0])
+            d[r[yi]] += r[wi]
+    assert set(cats) == set(exp)
+    for c, (ne, ev) in exp.items():
+        assert (cats[c]["n_nonevent"], cats[c]["n_event"]) == (ne, ev)
+
+
 def test_fused_process_fit_matches_fallback(spark):
-    """The two-job fused cart fit (probe + combined stacked agg) must
-    reproduce the multi-pass fallback exactly: same splits, same bin
-    tables — across small/high-cardinality numerics, categoricals,
-    special codes, user splits and weights."""
+    """The fused cart fit (the one statistics route) reproduces an
+    independent numpy recount exactly: prebin statistics and final
+    tables, across small/high-cardinality numerics, categoricals,
+    special codes, user splits and weights. The high-cardinality
+    variable takes the probe route's bucketized path, where splits
+    snap to bucket edges so the driver re-reduce stays exact."""
     rng = np.random.RandomState(3)
     rows = []
     for i in range(6000):
@@ -479,58 +552,176 @@ def test_fused_process_fit_matches_fallback(spark):
     df = spark.createDataFrame(
         rows, "xs double, xb double, cat string, y int, w double")
 
-    import optbinning_spark.operators.prebinning as PB
+    bp = BinningProcess(
+        ["xs", "xb", "cat"],
+        special_codes=[-9.0],
+        binning_fit_params={"xs": {"user_splits": [10.0, 20.0, 30.0]}},
+    )
+    seen = _spy_fit(bp)
+    bp.fit(df, "y", sample_weight="w")
+    assert seen["routes"] == ["probe"]  # xb (> 4,096 distinct) overflows
+    assert sorted(seen["big"][-1]) == ["xb", "xs"]
+    splits_by_var, stats_by_var = seen["prebins"]
+    assert list(splits_by_var["xs"]) == [10.0, 20.0, 30.0]
+    y = [r[3] for r in rows]
+    w = [r[4] for r in rows]
+    for i, v in ((0, "xs"), (1, "xb")):
+        x = [r[i] for r in rows]
+        pre = _recount(x, y, w, splits_by_var[v], special=-9.0)
+        np.testing.assert_array_equal(
+            stats_by_var[v].clean["n_nonevent"], pre["clean"][0])
+        np.testing.assert_array_equal(
+            stats_by_var[v].clean["n_event"], pre["clean"][1])
+        ob = bp._binners[v]
+        assert len(ob.splits), f"{v} should produce splits"
+        _table_matches_recount(
+            ob, _recount(x, y, w, ob.splits, special=-9.0))
+    _categories_match_recount(stats_by_var["cat"][0], rows, 2, 3, 4)
 
-    def fit(force_fallback):
-        bp = BinningProcess(
-            ["xs", "xb", "cat"],
-            special_codes=[-9.0],
-            binning_fit_params={"xs": {"user_splits": [10.0, 20.0, 30.0]}},
-        )
-        if force_fallback:
-            orig = bp._fused_fit_stats
-            bp._fused_fit_stats = lambda *a, **k: None
-        orig_buckets = PB.MAX_HISTOGRAM_BUCKETS
-        PB.MAX_HISTOGRAM_BUCKETS = 64  # xb overflows -> bucket path
-        try:
-            bp.fit(df, "y", sample_weight="w")
-        finally:
-            PB.MAX_HISTOGRAM_BUCKETS = orig_buckets
+
+def _uniform_rows(n=6000):
+    rng = np.random.RandomState(11)
+    rows = []
+    for i in range(n):
+        xs = float(rng.randint(0, 40))
+        xb = float(np.round(rng.uniform(0, 1000), 6))  # ~6000 distinct
+        p = 0.1 + 0.5 * xb / 1000 + 0.2 * (xs > 20)
+        if i % 97 == 0:
+            xs = -9.0
+        elif i % 101 == 0:
+            xs = None
+        cat = None if i % 89 == 0 else "uvwxyz"[i % 6]
+        rows.append((xs, xb, cat, int(rng.rand() < p), float(1 + i % 3)))
+    return rows
+
+
+@pytest.mark.parametrize("variables,route", [
+    (["xs", "cat"], "optimistic"),
+    (["xs", "xb", "cat"], "probe"),
+])
+def test_uniform_process_fit_matches_recount(spark, variables, route):
+    """prebinning_method="uniform" rides the one statistics route:
+    narrow, the optimistic stacked collect (splits from the exact
+    distinct values); with a variable past the 4,096 per-variable cap,
+    the probe route (exact min/max in the probe, then the bucket path
+    with the uniform splits as edges). Splits equal the min/max
+    formula and tables a numpy recount, special codes and weights
+    included."""
+    rows = _uniform_rows()
+    df = spark.createDataFrame(
+        rows, "xs double, xb double, cat string, y int, w double")
+    bp = BinningProcess(variables, categorical_variables=["cat"],
+                        special_codes=[-9.0], prebinning_method="uniform",
+                        max_n_prebins=10)
+    seen = _spy_fit(bp)
+    bp.fit(df, "y", sample_weight="w")
+    assert seen["routes"] == [route]
+    assert seen["big"][-1] == (["xb"] if route == "probe" else [])
+    splits_by_var, stats_by_var = seen["prebins"]
+    y = [r[3] for r in rows]
+    w = [r[4] for r in rows]
+    for i, v in ((0, "xs"), (1, "xb")):
+        if v not in variables:
+            continue
+        x = [r[i] for r in rows]
+        clean = [t for t in x if t is not None and t != -9.0]
+        mn, mx = min(clean), max(clean)
+        step = (mx - mn) / 10
+        expected = np.unique([mn + k * step for k in range(1, 10)])
+        np.testing.assert_array_equal(splits_by_var[v], expected)
+        pre = _recount(x, y, w, expected, special=-9.0)
+        np.testing.assert_array_equal(
+            stats_by_var[v].clean["n_nonevent"], pre["clean"][0])
+        np.testing.assert_array_equal(
+            stats_by_var[v].clean["n_event"], pre["clean"][1])
+        assert (stats_by_var[v].missing["n_nonevent"],
+                stats_by_var[v].missing["n_event"]) == pre["missing"]
+        _table_matches_recount(
+            bp._binners[v],
+            _recount(x, y, w, bp._binners[v].splits, special=-9.0))
+    cats, missing, _ = stats_by_var["cat"]
+    _categories_match_recount(cats, rows, 2, 3, 4)
+    assert missing["n_nonevent"] + missing["n_event"] == sum(
+        r[4] for r in rows if r[2] is None)
+
+
+def test_probe_route_recollects_past_the_limit(spark, monkeypatch):
+    """The probe route's only LIMIT overflow real data can reach is a
+    categorical past the per-variable level allowance: the fit then
+    re-collects the same stacked aggregation once without the LIMIT.
+    Forced here (optimistic route off, allowance 0) it must give the
+    tables of the unforced fit."""
+    import optbinning_spark.binning_process as BPM
+
+    rng = np.random.RandomState(7)
+    rows = []
+    for i in range(9000):
+        x = float(rng.randint(0, 40))
+        cat = f"c{i % 8800}"  # > the 8,458-row LIMIT with allowance 0
+        y = int(rng.rand() < 0.2 + 0.4 * (x > 20))
+        rows.append((-9.0 if i % 97 == 0 else x, cat, y))
+    df = spark.createDataFrame(rows, "x double, cat string, y int")
+
+    def fit():
+        bp = BinningProcess(["x", "cat"], categorical_variables=["cat"],
+                            special_codes=[-9.0])
+        bp.fit(df, "y")
         return bp
 
-    # patch per-var cap used by the fused path so xb goes bucketized in
-    # BOTH paths: fused uses 4096 (xb ~6000 distinct > cap already)
-    fused = fit(False)
-    fall = fit(True)
-    for v in ("xs", "cat"):
-        tf = fused._binners[v].binning_table.build(add_totals=False)
-        tb = fall._binners[v].binning_table.build(add_totals=False)
-        assert list(tf["bin"]) == list(tb["bin"])
-        np.testing.assert_allclose(
-            np.array(tf["count"], dtype=float),
-            np.array(tb["count"], dtype=float))
-        np.testing.assert_allclose(
-            np.array(tf["woe"], dtype=float),
-            np.array(tb["woe"], dtype=float), rtol=1e-12)
-    # xb: both bucketized but fused snaps to edges — verify exactness
-    # of the fused table against a raw recount instead of equality
-    ob = fused._binners["xb"]
-    splits = list(ob.splits)
-    assert splits, "xb should produce splits"
-    tbl = ob.binning_table.build(add_totals=False)
-    clean = tbl[~tbl["bin"].isin(["Special", "Missing"])]
-    b = F.lit(0)
-    for s in splits:
-        b = b + (F.col("xb") >= F.lit(float(s))).cast("int")
-    chk = (
-        df.filter(F.col("xb") != -9.0)
-        .groupBy(b.alias("bin"))
-        .agg(F.sum("w").alias("n"))
-        .orderBy("bin").collect()
-    )
-    np.testing.assert_allclose(
-        np.array(clean["count"], dtype=float),
-        np.array([r["n"] for r in chk], dtype=float))
+    base = fit()
+    collects = []
+    frame_cls = type(df)  # the concrete (classic) DataFrame class
+    collect = frame_cls.collect
+
+    def counting_collect(self):
+        collects.append(1)
+        return collect(self)
+
+    monkeypatch.setattr(BPM, "_CAT_LEVELS_PER_VAR", 0)
+    monkeypatch.setattr(BinningProcess, "_optimistic_narrow_fit",
+                        lambda *a, **k: None)
+    monkeypatch.setattr(frame_cls, "collect", counting_collect)
+    forced = fit()
+    monkeypatch.undo()
+    # probe (first() collects) + LIMIT-guarded stats + unlimited stats
+    assert len(collects) == 3
+    for v in ("x", "cat"):
+        ta = base._binners[v].binning_table.build(add_totals=False)
+        tb = forced._binners[v].binning_table.build(add_totals=False)
+        assert ta.equals(tb), v
+
+
+def test_scorecard_numeric_specials_with_categorical(spark):
+    """One global numeric special_codes list plus a categorical
+    variable: scoring matches each special group only against columns
+    of its type (a numeric code against a string column raises
+    CAST_INVALID_INPUT under ANSI), and special and missing rows get 0
+    points."""
+    rng = np.random.RandomState(13)
+    rows = []
+    for i in range(3000):
+        x = float(rng.uniform(0, 100))
+        cat = "abc"[i % 3]
+        p = 0.05 + 0.6 * x / 100 + {"a": 0.0, "b": 0.1, "c": 0.2}[cat]
+        y = int(rng.rand() < p)
+        if i % 50 == 0:
+            x = -9.0
+        elif i % 53 == 0:
+            x = None
+        rows.append((i, x, None if i % 47 == 0 else cat, y))
+    df = spark.createDataFrame(rows, "id long, x double, cat string, y int")
+    bp = BinningProcess(["x", "cat"], categorical_variables=["cat"],
+                        special_codes=[-9.0], prebinning_method="quantile")
+    sc = Scorecard(bp).fit(df, "y")
+    assert sc.selected_ == ["x", "cat"]
+    assert sc.score(df).filter(F.col("score").isNull()).count() == 0
+    pts = sc.transform(df).select(
+        "x", "cat", "x_points", "cat_points").collect()
+    x_zero = [r["x_points"] for r in pts if r["x"] is None or r["x"] == -9.0]
+    cat_zero = [r["cat_points"] for r in pts if r["cat"] is None]
+    assert len(x_zero) > 100 and len(cat_zero) > 50
+    assert set(x_zero) == {0.0} and set(cat_zero) == {0.0}
+    assert any(r["x_points"] != 0.0 for r in pts if r["x"] is not None)
 
 
 def test_rounding_preserves_min_max_total_score():

@@ -16,9 +16,6 @@ Fix toggles (env):
                               a JVM-only GC cannot free plans /
                               broadcasts still pinned from Python)
     SPARK_GRAFT_PERIODIC_GC=30s   spark.cleaner.periodicGC.interval
-    SPARK_GRAFT_NO_PERSIST=1  disable the wide-fit MEMORY_AND_DISK
-                              persist (binning_process.py)
-    SPARK_GRAFT_NO_SPREAD=1   disable the wide-fit repartition spread
 
 Instrumentation per measurement: JVM GC cumulative time/count, heap
 used, and shuffle/block file count under the session's local dirs.
