@@ -4539,44 +4539,45 @@ def entry(spark: SparkSession) -> DataFrame:
 #: rationale comments through round 12 live in git (e769106 and
 #: earlier; the round-13 rotation narrative in f05a462).
 #:
-#: Round-18 rotation (r17 verdict ask #1): the r17 optimization round
-#: substantively rewrote ~25 query paths but the (unrotated) r16/r17
-#: window covered only 8 of them — the rewritten set's correctness
-#: evidence was repo-internal (127-entry gate + parity tests) for a
-#: full round. This window LEADS with the 12 rewritten queries the
-#: verdict queued by name (semantic_dedup .. scorecard_scores_huber)
-#: so their r17 rewrites get driver-hash ground truth. FILL (15):
-#: the rest of the r14-vintage cohort (event_window_stats ..
-#: convex_binning_table) — oldest driver hash in the registry (age 4;
-#: their planned r17 rotation never ran, r17 being an optimization
-#: round). FILL (23): the head of the r15-green cohort in tail order
-#: (doc_chunks .. scorecard_table_rebased), age 3. OUT: the r16/r17
-#: window (age 0, hashed twice running) and the remaining r15 cohort
-#: (age 3, leads the next rotation); all stay hash-checked by
+#: Current rotation: the window LEADS with dedup_clusters_dist, whose
+#: driver union-find closure has no driver hash yet, then the six tail queries whose transform/score expressions are now
+#: rendered as one parsed SQL CASE string per variable
+#: (woe_transform .. scorecard_table_linear), so the re-rendered
+#: expressions get driver-hash ground truth. OUT (7): the entries of
+#: the previous window with the longest driver-hash history — first
+#: hashed in round 1 and hashed in 12-13 rounds (class_weight_agg,
+#: outlier_iqr, exact_dedup, jaccard_pairs, event_window_stats, ks,
+#: multiclass_binning_table); they close the tail. The other 43 keep
+#: their order. Round-18 rotation (r17 verdict ask #1): the window
+#: led with the 12 queries the r17 optimization round rewrote
+#: (semantic_dedup .. scorecard_scores_huber), then the rest of the
+#: r14-vintage cohort and the head of the r15-green cohort in tail
+#: order. Every entry, in or out of the window, stays hash-checked by
 #: tools/check_correctness full-registry runs every session.
 _WINDOW = [
+    "dedup_clusters_dist",
+    "woe_transform",
+    "optimal_woe_transform",
+    "mean_transform",
+    "scorecard_scores",
+    "scorecard_scores_linear",
+    "scorecard_table_linear",
     "semantic_dedup",
     "incremental_dedup",
-    "exact_dedup",
     "dsir_logweights",
     "lm_perplexity",
     "paragraph_dedup",
     "dedup_clusters",
     "nb_quality_score",
-    "jaccard_pairs",
     "training_sequences",
     "ann_topk",
     "scorecard_scores_huber",
-    "event_window_stats",
-    "ks",
-    "multiclass_binning_table",
     "outlier_zscore",
     "quantile_splits",
     "regression_metrics",
     "scorecard_scores_logistic",
     "uniform_binning_table",
     "binning_2d_pinned",
-    "class_weight_agg",
     "concave_binning_table",
     "gopher_flags",
     "indices_bins_transform",
@@ -4584,7 +4585,6 @@ _WINDOW = [
     "convex_binning_table",
     "doc_chunks",
     "multimodal_features",
-    "outlier_iqr",
     "quality_top_fraction",
     "scorecard_table_pdo",
     "sketch_binning_exact",
@@ -4608,8 +4608,9 @@ _WINDOW = [
 ]
 
 #: Tail: the remaining r15-green entries (age 3 — they lead the next
-#: rotation), the r16 debuts, then the outgoing r16/r17 window
-#: (age 0). Every oracle-backed entry here stays hash-checked by
+#: rotation), the r16 debuts, the outgoing r16/r17 window, then the
+#: seven entries rotated out of the round-18 window. Every
+#: oracle-backed entry here stays hash-checked by
 #: tools/check_correctness full-registry runs even while out of the
 #: driver window.
 _TAIL = [
@@ -4650,7 +4651,6 @@ _TAIL = [
     "outlier_yquantile",
     "special_missing_stats",
     "counterfactual_pinned",
-    "dedup_clusters_dist",
     "bm25_topk",
     "classification_metrics",
     "event_type_psi",
@@ -4670,20 +4670,14 @@ _TAIL = [
     "wide_fit_contract",
     "binning_2d_3x3",
     "sketch_binning_table",
-    "scorecard_table_linear",
     "wide_fit_exact",
     "optimal_binning_table",
-    "optimal_woe_transform",
     "continuous_bin_stats",
     "categorical_optimal_binning",
     "scorecard_table",
-    "scorecard_scores",
     "multiclass_bin_counts",
     "scenario_binning_table",
-    "woe_transform",
-    "mean_transform",
     "binning_process_summary",
-    "scorecard_scores_linear",
     "binning_2d_table",
     "continuous_binning_2d_table",
     "psi_variable_report",
@@ -4697,6 +4691,15 @@ _TAIL = [
     "continuous_binning_table",
     "counterfactual_mahalanobis_pinned",
     "doc_normalize",
+    # outgoing from the round-18 window: its seven longest-hashed
+    # entries (first driver hash in round 1, hashed in 12-13 rounds)
+    "class_weight_agg",
+    "outlier_iqr",
+    "exact_dedup",
+    "jaccard_pairs",
+    "event_window_stats",
+    "ks",
+    "multiclass_binning_table",
 ]
 
 
@@ -5927,7 +5930,7 @@ def _sql_scorecard3_core():
     -- missing features enter the engine's compressed design at the
     -- transform default woe = 0 (Scorecard.fit runs the estimator on
     -- bp.transform of ALL rows; the score path below keeps routing
-    -- NULLs to 0 POINTS per _points_case) — invisible on lineitem
+    -- NULLs to 0 POINTS per Scorecard._case_sql) — invisible on lineitem
     -- (no NULLs in these columns), diverged on missing-bearing
     -- corpora (r15 synthetic-corpus fuzz)
     SELECT COALESCE(x1, 0.0) AS x1, COALESCE(x2, 0.0) AS x2,
@@ -6298,7 +6301,7 @@ def _sql_scorecard_scores_linear():
     -- LEFT JOIN keeps missing rows: NULL features route to 0.0 in
     -- the DESIGN (the engine fits the WLS on bp.transform of ALL
     -- rows, metric_missing = 0) and to 0 POINTS in the score
-    -- (_points_case) — invisible on lineitem, which has no missing
+    -- (Scorecard._case_sql) — invisible on lineitem, which has no missing
     -- values in these columns (r15 synthetic-corpus fuzz)
     SELECT r2.l_orderkey, r2.l_linenumber, r2.y,
            b1.s1 / b1.cnt AS f1, b2.s1 / b2.cnt AS f2
@@ -6342,7 +6345,7 @@ def _sql_scorecard_scores_linear():
            100.0 / ((max1 + max2 + b0) - (min1 + min2 + b0)) AS slope,
            (min1 + min2 + b0) AS smin
     FROM ext)
-  -- per-variable points form (the engine's _points_case path):
+  -- per-variable points form (the engine's Scorecard._case_sql path):
   -- points_v = slope * (coef_v * f_v) + (shift + slope * b0) / 2 with
   -- shift = -slope * smin; a missing variable contributes 0 POINTS
   -- (equal to the old flat slope*((b0+b1f1+b2f2)-smin) when both

@@ -211,14 +211,19 @@ class _BaseOptimalBinning:
     ) -> DataFrame:
         self._check_fitted()
         expr = self.transform_column_expr(
-            F.col(x), metric=metric, metric_special=metric_special,
+            x, metric=metric, metric_special=metric_special,
             metric_missing=metric_missing,
         )
         return df.withColumn(out_col or f"{x}_{metric}", expr)
 
     def transform_column_expr(
-        self, col, metric: str = "woe", metric_special=0, metric_missing=0
+        self, col, metric: str = "woe", metric_special=0, metric_missing=0,
+        *, cast: str | None = None, alias: str | None = None,
     ):
+        """The transform as one Column. ``col`` is a Column, or a column
+        name (str), which renders the CASE as one parsed SQL string;
+        ``cast`` casts the input first and ``alias`` names the
+        result."""
         self._check_fitted()
         return transform_expr(
             col,
@@ -231,6 +236,8 @@ class _BaseOptimalBinning:
             metric_missing=metric_missing,
             special_codes=self.special_codes,
             show_digits=self.show_digits,
+            cast=cast,
+            alias=alias,
         )
 
     def fit_transform(self, df, x, y, sample_weight=None, metric="woe", **kw):

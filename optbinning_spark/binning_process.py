@@ -934,15 +934,14 @@ class BinningProcess:
         cols = [F.col(c) for c in (keep_cols or [])]
         for v in self.support_:
             p = self.binning_transform_params.get(v, {})
-            m = p.get("metric", default_metric)
-            b = self._binners[v]
-            expr = b.transform_column_expr(
-                F.col(v).cast("double") if self._dtypes[v] == "numerical" else F.col(v),
-                metric=m,
+            cols.append(self._binners[v].transform_column_expr(
+                v,
+                metric=p.get("metric", default_metric),
                 metric_special=p.get("metric_special", metric_special),
                 metric_missing=p.get("metric_missing", metric_missing),
-            )
-            cols.append(expr.alias(v))
+                cast="double" if self._dtypes[v] == "numerical" else None,
+                alias=v,
+            ))
         return df.select(*cols)
 
     def fit_transform(self, df, y, sample_weight=None, metric=None, **kw):

@@ -40,8 +40,10 @@ class ScorecardMonitoring:
         sc = self.scorecard
         self._y = y
 
-        a = sc.score(actual, "__score").withColumn("__pop", F.lit("A"))
-        e = sc.score(expected, "__score").withColumn("__pop", F.lit("E"))
+        score = sc.score_expr()  # one expression for both populations
+        a = actual.withColumn("__score", score).withColumn("__pop", F.lit("A"))
+        e = expected.withColumn("__score", score).withColumn(
+            "__pop", F.lit("E"))
         both = a.select("__score", "__pop", F.col(y).alias("__y")).unionByName(
             e.select("__score", "__pop", F.col(y).alias("__y"))
         )

@@ -359,8 +359,14 @@ class MulticlassOptimalBinning(_BaseOptimalBinning):
         )
 
     def transform_column_expr(self, col, metric="mean_woe", metric_special=0,
-                              metric_missing=0):
+                              metric_missing=0, *, cast=None, alias=None):
+        """Column-op transform; a str ``col`` is a column name, with the
+        same ``cast``/``alias`` keywords as the binary binner."""
         self._check_fitted()
+        if isinstance(col, str):
+            col = F.col(col)
+        if cast:
+            col = col.cast(cast)
         t = self._table
         if metric == "mean_woe":
             vals = [float(v) for v in t.mean_woe[: len(self._splits) + 1]]
@@ -381,7 +387,8 @@ class MulticlassOptimalBinning(_BaseOptimalBinning):
         splits = list(self._splits)
         for i, s in enumerate(splits):
             expr = expr.when(col < float(s), F.lit(vals[i]))
-        return expr.otherwise(F.lit(vals[len(splits)]))
+        expr = expr.otherwise(F.lit(vals[len(splits)]))
+        return expr.alias(alias) if alias is not None else expr
 
     def transform(self, df, x, metric="mean_woe", metric_special=0,
                   metric_missing=0, out_col=None):

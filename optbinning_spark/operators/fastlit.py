@@ -20,6 +20,8 @@ grammar for them); nested lists recurse into nested arrays.
 
 from __future__ import annotations
 
+import weakref
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -57,7 +59,7 @@ def double_array_lit(values) -> Column:
     return F.expr(_render(values))
 
 
-_parser_checked_sessions: set = set()
+_parser_checked_sessions: "weakref.WeakSet" = weakref.WeakSet()
 
 
 def _assert_default_string_parser() -> None:
@@ -66,17 +68,21 @@ def _assert_default_string_parser() -> None:
     Hive-compat setting true, ``\\uXXXX`` escapes and doubled
     backslashes parse as literal characters and silently produce wrong
     tokenization/shingles/vocab maps. Fail loudly instead — checked
-    once per active session (one conf round trip), never per render."""
-    try:
-        from pyspark.sql import SparkSession
+    once per session. The session is looked up through pyspark's
+    Python-side active-session handle, so every call after the first
+    costs no py4j round trip (``getActiveSession()`` alone costs
+    four)."""
+    from pyspark.sql import SparkSession
 
-        s = SparkSession.getActiveSession()
-    except Exception:
-        return
+    s = SparkSession._activeSession
     if s is None:
-        return
-    key = id(s._jsparkSession) if hasattr(s, "_jsparkSession") else id(s)
-    if key in _parser_checked_sessions:
+        try:
+            s = SparkSession.getActiveSession()
+        except Exception:
+            return
+        if s is None:
+            return
+    if s in _parser_checked_sessions:
         return
     if str(s.conf.get("spark.sql.parser.escapedStringLiterals",
                       "false")).lower() == "true":
@@ -86,7 +92,7 @@ def _assert_default_string_parser() -> None:
             "literals (backslash/\\uXXXX escapes would parse as "
             "literal characters and silently corrupt tokenization); "
             "unset the conf or use the Column-op paths")
-    _parser_checked_sessions.add(key)
+    _parser_checked_sessions.add(s)
 
 
 def sql_str_lit(s: str) -> str:
@@ -107,6 +113,42 @@ def sql_str_lit(s: str) -> str:
         else:
             out.append(ch)
     return "'" + "".join(out) + "'"
+
+
+def py_scalar(v):
+    """A numpy scalar as its Python value (what py4j hands the JVM for
+    it); anything else unchanged."""
+    return v.item() if hasattr(v, "item") and not isinstance(v, str) else v
+
+
+def sql_lit(v) -> str:
+    """SQL text of a scalar literal, typed exactly as ``F.lit(v)`` types
+    it: bool -> BOOLEAN; int -> INT, or BIGINT past 32 bits (the parser
+    and py4j share that boundary); float -> DOUBLE (shortest ``repr``
+    plus the ``D`` suffix, NaN/+-Inf as CASTs, see ``_fmt_scalar``);
+    str -> STRING; None -> NULL. numpy scalars render as their Python
+    value."""
+    v = py_scalar(v)
+    if v is None:
+        return "NULL"
+    if isinstance(v, bool):
+        return "true" if v else "false"
+    if isinstance(v, int):
+        return str(v)
+    if isinstance(v, float):
+        return _fmt_scalar(v)
+    if isinstance(v, str):
+        return sql_str_lit(v)
+    raise TypeError(f"no SQL literal for {type(v).__name__}: {v!r}")
+
+
+def sql_ident(name: str) -> str:
+    """Backtick-quoted SQL reference to column ``name``, resolved the
+    way ``F.col(name)`` resolves it: dotted names quote each path
+    segment, so 'meta.text' stays the qualified/nested reference it is
+    on the Column path rather than one literal identifier."""
+    return ".".join(
+        "`" + part.replace("`", "``") + "`" for part in name.split("."))
 
 
 # backwards-compatible internal alias (pre-r18 name)

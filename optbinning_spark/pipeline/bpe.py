@@ -129,16 +129,12 @@ def _spark_str(s: str) -> str:
 
 
 def _as_col_sql(text) -> str | None:
-    """SQL rendering of ``text`` when it is a plain column NAME (str);
-    None for Column inputs — those take the Column-op path. Dotted
-    names quote each path segment (like F.col), so 'meta.text'
-    resolves as the qualified/nested reference it always did on the
-    Column path rather than one literal identifier."""
-    if isinstance(text, str):
-        return ".".join(
-            "`" + part.replace("`", "``") + "`"
-            for part in text.split("."))
-    return None
+    """SQL rendering of ``text`` when it is a plain column NAME (str,
+    quoted like F.col by ``sql_ident``); None for Column inputs —
+    those take the Column-op path."""
+    from ..operators.fastlit import sql_ident
+
+    return sql_ident(text) if isinstance(text, str) else None
 
 
 def _merged_sql_spark(col_sql: str, merges) -> tuple[str, str]:

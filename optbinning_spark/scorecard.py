@@ -6,11 +6,16 @@ Reference: optbinning/scorecard/scorecard.py (pipeline), rounding.py
 Spark design:
 - binning_process.fit_transform produces the WoE matrix in one
   map-only projection;
-- the estimator is MLlib LogisticRegression / LinearRegression
-  (X1 pluggable-estimator surface; coefficients are what scorecard
-  points need);
+- the estimator runs on the driver: the WoE design is compressed to
+  one weighted row per distinct (X, label), collected through Arrow
+  and solved by IRLS (logistic) or weighted least squares (linear);
+  huber and custom estimators fit a bounded hashed sample. MLlib
+  LogisticRegression / LinearRegression run only when regParam > 0
+  or the compressed design exceeds max_driver_rows. Coefficients are
+  what scorecard points need (X1 pluggable-estimator surface);
 - scoring is a PURE COLUMN EXPRESSION: score(x) = base + sum of
-  per-variable CASE(bin -> points). No vector assembly, no model
+  per-variable CASE(bin -> points), rendered as one SQL string and
+  parsed once (operators/transform.py). No vector assembly, no model
   object at inference time — a scorecard scored over 100 TB is a
   map-only scan, and predict_proba is the closed-form sigmoid of the
   same linear expression.
@@ -23,6 +28,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .binning_process import BinningProcess
+from .operators.fastlit import sql_lit
+from .operators.transform import alias_sql, case_branches, case_sql, column_sql
 
 _EPS = 1e-15
 
@@ -240,10 +247,13 @@ class Scorecard:
         # so the WoE matrix has at most prod(n_bins) distinct rows.
         # Group identical (X, label) rows into one weighted row — the
         # weighted likelihood (logistic) / normal equations (linear)
-        # are unchanged, and LBFGS's many passes then scan a few
-        # hundred rows instead of the full table. One shuffle replaces
-        # per-iteration full scans; at 100 TB this is the difference
-        # between one aggregation and ~25 dataset passes.
+        # are unchanged. How much this saves depends on the width: a
+        # few variables compress to a few hundred rows, but at 16
+        # variables prod(n_bins) dwarfs the row count and the design
+        # keeps most of the input (56,756 of 61,502 rows on a month of
+        # perfbench's Home-Credit-shaped credit_scorecard table). At
+        # 100 TB the one shuffle still replaces MLlib's ~25
+        # per-iteration full scans.
         kind0 = self.estimator
         if kind0 == "auto":
             kind0 = "logistic" if self._target_type == "binary" else "linear"
@@ -365,51 +375,49 @@ class Scorecard:
         w = "__w"
         kind = kind0
 
-        # Driver solve on the collected sufficient statistics when the
-        # compressed design is small (it is, by construction: at most
-        # prod(n_bins) * n_labels rows). One collect replaces the
+        # Driver solve (IRLS / WLS) on the collected sufficient
+        # statistics when the compressed design has at most
+        # max_driver_rows rows. One collect replaces the
         # per-LBFGS-iteration job storm; results match an unregularized
-        # MLlib fit to optimizer tolerance. Large compressed designs
-        # (high-cardinality interactions) fall back to MLlib.
+        # MLlib fit to optimizer tolerance. Larger designs, and any
+        # regParam > 0, fall back to MLlib.
         reg = float(self.estimator_params.get("regParam", 0.0))
         max_driver_rows = int(self.estimator_params.get("max_driver_rows", 100_000))
-        rows = None
+        pdf = None
         if reg == 0.0:
             # deterministic order: the normal-equation sums are float
             # and order-dependent at the last ulp; a stable orderBy
-            # makes consecutive fits bit-identical
-            rows = woe.orderBy(*self.selected_, y).limit(
-                max_driver_rows + 1).collect()
-            if len(rows) > max_driver_rows:
-                rows = None
-        if rows is not None:
+            # makes consecutive fits bit-identical. Arrow toPandas, not
+            # collect(): the design is most of the input at 16
+            # variables, and pickled Rows read back one field at a time
+            # cost seconds of driver Python per fit
+            pdf = woe.orderBy(*self.selected_, y).limit(
+                max_driver_rows + 1).toPandas()
+            if len(pdf) > max_driver_rows:
+                pdf = None
+        if pdf is not None:
+            # C order, as the row-by-row build had: the IRLS/WLS
+            # products sum in memory order, and a column-major X moves
+            # the coefficients at the last ulps
+            X = np.ascontiguousarray(
+                pdf[list(self.selected_)].to_numpy(dtype=float))
+            yy = pdf[y].to_numpy(dtype=float)
+            ww = pdf["__w"].to_numpy(dtype=float)
             # same loud-failure posture as the robust-estimator sample
-            # path above: a NULL label (e.g. the target column carries
-            # missing values) used to surface as a bare "float()
-            # argument ... NoneType" from deep inside the
-            # comprehension, and a NaN label (Spark's sum PROPAGATES
-            # NaN through the design compression) silently poisoned
-            # every coefficient — refuse both with the actionable
-            # message
-            if any(r[y] is None or r["__w"] is None
-                   or ("__badlab" in r and (r["__badlab"] or 0) > 0)
-                   or any(r[v] is None for v in self.selected_)
-                   for r in rows):
+            # path above. Arrow hands a NULL label/weight over as NaN,
+            # and Spark's sum PROPAGATES a NaN label through the design
+            # compression, so either would silently poison every
+            # coefficient; __badlab counts the NULL labels the linear
+            # path's per-group mean skipped
+            null_labels = "__badlab" in pdf and (pdf["__badlab"] > 0).any()
+            if null_labels or not (np.isfinite(X).all()
+                                   and np.isfinite(yy).all()
+                                   and np.isfinite(ww).all()):
                 raise ValueError(
-                    "null in the estimator design (WoE feature, label "
-                    "or weight) — the target column carries missing "
-                    "values; filter or impute the offending rows "
-                    "before Scorecard.fit")
-            X = np.array([[float(r[v]) for v in self.selected_] for r in rows])
-            yy = np.array([float(r[y]) for r in rows])
-            ww = np.array([float(r["__w"]) for r in rows])
-            if not (np.isfinite(X).all() and np.isfinite(yy).all()
-                    and np.isfinite(ww).all()):
-                raise ValueError(
-                    "non-finite value in the estimator design (WoE "
-                    "feature, label or weight) — the target column "
-                    "carries NaN/Inf; filter or impute the offending "
-                    "rows before Scorecard.fit")
+                    "null or non-finite value in the estimator design "
+                    "(WoE feature, label or weight) — the target column "
+                    "carries missing or NaN/Inf values; filter or "
+                    "impute the offending rows before Scorecard.fit")
             if kind == "logistic":
                 return _driver_logistic(X, yy, ww)
             if kind == "linear":
@@ -548,70 +556,55 @@ class Scorecard:
             out = out[keep]
         return out
 
-    def score_expr(self):
-        """The scorecard as ONE column expression."""
-        self._check_fitted()
+    def _case_sql(self, v, vals) -> str:
+        """SQL text of variable ``v``'s CASE: the clean bins map to
+        ``vals``; missing, special and unknown-category rows map to 0
+        (the estimator saw the metric default 0 there, so they add
+        nothing to the linear predictor)."""
         bp = self.binning_process
-        total = F.lit(self.base_points_)
-        for v in self.selected_:
-            b = bp.get_binned_variable(v)
-            pts = [float(p) for p in self.points_[v]]
-            col = (
-                F.col(v).cast("double")
-                if bp._dtypes[v] == "numerical"
-                else F.col(v)
-            )
-            expr = self._points_case(b, col, pts, bp._dtypes[v])
-            total = total + expr
-        return total
-
-    def _points_case(self, binner, col, pts, dtype):
-        from .operators.preprocessing import (
-            _typed_specials,
-            missing_predicate,
-            normalize_special_codes,
+        b = bp.get_binned_variable(v)
+        dtype = bp._dtypes[v]
+        branches = case_branches(
+            dtype=dtype, splits=b._splits,
+            bin_categories=b._bin_categories,
+            special_codes=b.special_codes,
+            clean_vals=[float(x) for x in vals], default=0.0,
+            missing_value=0.0, special_value=lambda gi, g: 0.0,
         )
+        cast = "double" if dtype == "numerical" else None
+        return case_sql(column_sql(v, cast), branches, dtype)
 
-        groups = normalize_special_codes(binner.special_codes)
-        # missing/special contribute 0 points (metric default 0 * coef);
-        # only codes of the column's type can match (a numeric code
-        # against a string column is a CAST_INVALID_INPUT under ANSI)
-        expr = F.when(missing_predicate(col, dtype), F.lit(0.0))
-        for values in groups.values():
-            values = _typed_specials(values, dtype)
-            if values:
-                expr = expr.when(col.isin(values), F.lit(0.0))
-        if dtype == "categorical":
-            for bin_idx, cats in enumerate(binner._bin_categories or []):
-                expr = expr.when(col.isin(list(cats)), F.lit(pts[bin_idx]))
-            return expr.otherwise(F.lit(0.0))
-        splits = list(binner._splits)
-        if not splits:
-            return expr.otherwise(F.lit(pts[0] if pts else 0.0))
-        for i, s in enumerate(splits):
-            expr = expr.when(col < float(s), F.lit(pts[i]))
-        return expr.otherwise(F.lit(pts[len(splits)]))
+    def _linear_sql(self, base, per_bin) -> str:
+        """``base + CASE(v1) + CASE(v2) + ...`` as SQL text, with
+        ``per_bin(v)`` the clean-bin values of variable v — the same
+        left-deep sum the Column ``+`` chain builds."""
+        return " + ".join(
+            [sql_lit(float(base))]
+            + [self._case_sql(v, per_bin(v)) for v in self.selected_])
+
+    def _coef_times_metric(self, v):
+        _, _, vals = self._variable_bin_metric(v)
+        return [float(self.coef_[v] * x) for x in vals]
+
+    def score_expr(self):
+        """The scorecard as ONE column expression (one parsed SQL
+        string: one py4j round trip at any number of variables)."""
+        self._check_fitted()
+        return F.expr(self._linear_sql(self.base_points_,
+                                       lambda v: self.points_[v]))
 
     def score(self, df: DataFrame, out_col: str = "score") -> DataFrame:
         return df.withColumn(out_col, self.score_expr())
+
+    def _proba_sql(self) -> str:
+        lin = self._linear_sql(self.intercept_, self._coef_times_metric)
+        return f"1.0D / (1.0D + exp(-({lin})))"
 
     def predict_proba_expr(self):
         """Closed-form sigmoid of the linear predictor — map-only
         scoring at any scale (binary only)."""
         self._check_fitted()
-        bp = self.binning_process
-        lin = F.lit(self.intercept_)
-        for v in self.selected_:
-            b = bp.get_binned_variable(v)
-            _, _, woes = self._variable_bin_metric(v)
-            vals = [float(self.coef_[v] * w) for w in woes]
-            col = (
-                F.col(v).cast("double")
-                if bp._dtypes[v] == "numerical"
-                else F.col(v)
-            )
-            lin = lin + self._points_case(b, col, vals, bp._dtypes[v])
-        return F.lit(1.0) / (F.lit(1.0) + F.exp(-lin))
+        return F.expr(self._proba_sql())
 
     def predict_proba(self, df: DataFrame, out_col: str = "proba") -> DataFrame:
         return df.withColumn(out_col, self.predict_proba_expr())
@@ -620,19 +613,8 @@ class Scorecard:
         """The estimator's linear predictor (signed distance to the
         hyperplane in WoE space) — reference scorecard.py:375-395."""
         self._check_fitted()
-        bp = self.binning_process
-        lin = F.lit(self.intercept_)
-        for v in self.selected_:
-            b = bp.get_binned_variable(v)
-            _, _, vals = self._variable_bin_metric(v)
-            pts = [float(self.coef_[v] * w) for w in vals]
-            col = (
-                F.col(v).cast("double")
-                if bp._dtypes[v] == "numerical"
-                else F.col(v)
-            )
-            lin = lin + self._points_case(b, col, pts, bp._dtypes[v])
-        return lin
+        return F.expr(self._linear_sql(self.intercept_,
+                                       self._coef_times_metric))
 
     def decision_function(self, df: DataFrame,
                           out_col: str = "decision") -> DataFrame:
@@ -643,40 +625,17 @@ class Scorecard:
         'transform the dataset into scores' of shape
         n_samples x n_features) plus the original columns."""
         self._check_fitted()
-        bp = self.binning_process
-        cols = []
-        for v in self.selected_:
-            b = bp.get_binned_variable(v)
-            pts = self.points_[v]
-            col = (
-                F.col(v).cast("double")
-                if bp._dtypes[v] == "numerical"
-                else F.col(v)
-            )
-            cols.append(
-                self._points_case(b, col, [float(p) for p in pts],
-                                  bp._dtypes[v]).alias(f"{v}_points")
-            )
-        return df.select("*", *cols)
+        return df.select("*", *[
+            F.expr(alias_sql(self._case_sql(v, self.points_[v]),
+                             f"{v}_points"))
+            for v in self.selected_])
 
     def predict(self, df: DataFrame, out_col: str = "prediction") -> DataFrame:
+        self._check_fitted()
         if self._target_type == "binary":
             return df.withColumn(
-                out_col, (self.predict_proba_expr() >= 0.5).cast("int")
-            )
-        bp = self.binning_process
-        lin = F.lit(self.intercept_)
-        for v in self.selected_:
-            b = bp.get_binned_variable(v)
-            _, _, means = self._variable_bin_metric(v)
-            vals = [float(self.coef_[v] * m) for m in means]
-            col = (
-                F.col(v).cast("double")
-                if bp._dtypes[v] == "numerical"
-                else F.col(v)
-            )
-            lin = lin + self._points_case(b, col, vals, bp._dtypes[v])
-        return df.withColumn(out_col, lin)
+                out_col, F.expr(f"CAST({self._proba_sql()} >= 0.5D AS INT)"))
+        return df.withColumn(out_col, self.decision_function_expr())
 
     # ------------------------------------------------------------------
     def save(self, path: str):

@@ -555,15 +555,10 @@ class BinningProcessSketch:
         binners = self._solved_binners()
         out_cols = [F.col(c) for c in (keep_cols or [])]
         for v in self.variable_names:
-            out_cols.append(
-                binners[v]
-                .transform_column_expr(
-                    F.col(v), metric=metric,
-                    metric_special=metric_special,
-                    metric_missing=metric_missing,
-                )
-                .alias(v)
-            )
+            out_cols.append(binners[v].transform_column_expr(
+                v, metric=metric, metric_special=metric_special,
+                metric_missing=metric_missing, alias=v,
+            ))
         return df.select(*out_cols)
 
     def information(self, print_level: int = 1) -> str:

@@ -9,7 +9,7 @@ every driver hash had passed vacuously; the first missing-bearing
 corpus diverged (logistic slope -0.99998 engine vs the oracle's exact
 MLE -1.0, score diffs up to 0.0075 at 4dp). The oracles now include
 the missing design rows / COALESCE features to 0, route missing to 0
-POINTS in scoring (the engine's _points_case), and map missing x to a
+POINTS in scoring (the engine's Scorecard._case_sql), and map missing x to a
 NULL prebin (a NULL lambda used to land missing in bin 0 and DuckDB's
 NaN ordering landed NaN in the LAST bin).
 
